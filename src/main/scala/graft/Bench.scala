@@ -86,53 +86,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER (r16, VERDICT r15 #4): lets one ledger window
-    // run under local-cluster executors (see SparkBoot). NOT the gate
-    // config; such windows are marked as cluster-mode in BASELINE.
-    val master = SparkBoot.master(cpus)
-    val builder = SparkSession.builder()
-      .master(master)
-      // UTC like every other entry point: the NTZ→session-tz cast in
-      // Tables.events must resolve identically to the Verify-checked plans
-      // on any host, or the bench times a different event workload
-      .config("spark.sql.session.timeZone", "UTC")
-      // Effective shuffle width is cpu-count: AQE shuffles START at
-      // initialPartitionNum=32 (below) and coalesce by data size. The
-      // static value 8 only governs the rare non-AQE paths — measured
-      // best at sf0.1 (tiny final sorts schedule 8 tasks, not 32).
-      .config("spark.sql.shuffle.partitions",
-              sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      // Input split size, swept empirically per-corpus (graft.DevSweep):
-      // with AQE off, 16m splits beat 1m on every heavy query — at this
-      // corpus size task-launch overhead outweighs extra scan parallelism.
-      // (Cluster deployments at real scale keep the 128m default — this is
-      // per-corpus sizing, SURVEY guidance.)
-      .config("spark.sql.files.maxPartitionBytes",
-              sys.env.getOrElse("SPARK_GRAFT_MPB", "16m"))
-      .config("spark.sql.files.openCostInBytes", "64k")
-      // AQE defaults OFF for the bench corpus (same per-corpus sizing
-      // rationale as maxPartitionBytes): its value — runtime coalescing,
-      // skew splits, join re-planning — grows with data, but its cost is a
-      // scheduler barrier + re-optimization per shuffle stage, which is
-      // ~flat per query. Swept at sf0.1 (graft.DevSweep): AQE-on is
-      // 25-40 % slower across both trivial and heavy queries at this
-      // corpus size. Cluster deployments at real scale keep it ON.
-      .config("spark.sql.adaptive.enabled",
-              sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      // AQE-managed shuffles always START at 32-way (full core count) and
-      // coalesce down by the advisory size; this pins that even if the
-      // static shuffle.partitions is tuned lower for non-AQE paths
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "32")
-      // the 50-query catalog generates far more whole-stage-codegen units
-      // than the default 100-entry class cache: every pass evicted the
-      // previous one, so "warm" runs were recompiling (Janino) inside the
-      // timed window. Size the cache to hold the whole catalog.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    val spark = SparkBoot.clusterize(builder, master).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SparkBoot.session: the one config Verify oracles. SPARK_GRAFT_MASTER
+    // (r16) lets one ledger window run under local-cluster executors; NOT
+    // the gate config, such windows are marked as cluster-mode in BASELINE.
+    val spark = SparkBoot.session(cpus)
     // SPARK_GRAFT_BENCH_ONLY (r17 — the ratio-edge protocol's Spark
     // side): comma-separated query names restrict the window to a
     // focused 5-rep re-time of the rows whose first-pass ratio landed

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only: 1× vs 10× scale-up smoke for the heavy operator family
@@ -19,25 +19,17 @@ object DevScale {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_scale10x"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the documented scale lever: partitions grow with the data (the
-      // fixed-8 artifact was ~1.2–1.3× above linear at 30× — BASELINE
-      // round-9 sweep); the 100× run (VERDICT r12 item 6) sets 64
-      .config("spark.sql.shuffle.partitions",
-              sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      // default off like the bench (sub-GB sweeps); SPARK_GRAFT_SCALE_AQE=1
-      // turns it on for runs that demonstrate the cluster-config behavior
-      // (r16: the q21/q126 broadcast-boundary re-check at 100×)
-      .config("spark.sql.adaptive.enabled",
-        if (sys.env.get("SPARK_GRAFT_SCALE_AQE").contains("1")) "true"
-        else "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkBoot.session("4")
+    // the documented scale lever: partitions grow with the data (the
+    // fixed-8 artifact was ~1.2–1.3× above linear at 30× — BASELINE
+    // round-9 sweep); the 100× run (VERDICT r12 item 6) sets 64
+    sys.env.get("SPARK_GRAFT_SHUFFLE")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
+    // off like the bench (sub-GB sweeps); SPARK_GRAFT_SCALE_AQE=1 turns it
+    // on for runs that demonstrate the cluster-config behavior (r16: the
+    // q21/q126 broadcast-boundary re-check at 100×)
+    if (sys.env.get("SPARK_GRAFT_SCALE_AQE").contains("1"))
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.sparkContext.setLogLevel("ERROR")
 
     // SPARK_GRAFT_SCALE_REPLICAS overrides the default 10× (round 9: a 30×

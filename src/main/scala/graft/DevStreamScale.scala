@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: 1× vs N× scale smoke for the STREAMING ingest path
   * (VERDICT r15 #8) — the twin DevIngestScale's batch sweep doesn't
   * touch: `Streams.ingestPdfStream` (binaryFile source + AvailableNow +
@@ -34,13 +32,7 @@ import org.apache.spark.sql.SparkSession
   */
 object DevStreamScale {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkBoot.session("4")
     spark.sparkContext.setLogLevel("ERROR")
 
     val replicas = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPLICAS", "10").toInt

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run one catalog query N times with timing and optional
   * formatted explain. Usage:
   *   runMain graft.RunOne <name> [sfDir] [reps] [explain]
@@ -13,14 +11,7 @@ object RunOne {
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
     val doExplain = args.contains("explain")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkBoot.session(cpus)
     val q = queries.Catalog.byName(name)
     if (doExplain) q.build(spark, sfDir).explain("formatted")
     (1 to reps).foreach { r =>

@@ -35,9 +35,9 @@ object Tables {
     * per-row kernel downstream (shingle build, 16-perm md5 signatures,
     * window fingerprints, vector distances) runs single-threaded until
     * the first exchange — measured at sf0.1 as c8 ≈ c32 across the whole
-    * catalog (BENCH_r17 vs BENCH_r17_c8). When the input plans FEWER
-    * partitions than the session's parallelism, hash-repartition on the
-    * table's stable unique key up to the parallelism; when the scan
+    * catalog (BENCH_r17 vs BENCH_r17_c8). When the input is too narrow to
+    * reach the session's parallelism, hash-repartition on a stable key of
+    * the caller's input contract up to the parallelism; when the scan
     * already fans wider — any real-scale corpus, where splits number in
     * the thousands — the gate is false and NO shuffle is ever added, so
     * the 100 TB plan shape is untouched. Hash keys (not round-robin) keep
@@ -46,34 +46,29 @@ object Tables {
     * sort-before-repartition pass, and identical across hosts. The
     * shuffle this pays at small scale is bounded by scanPartitions ×
     * maxPartitionBytes — exactly the regime where cores are idle and
-    * bytes are cheap. The probe (`rdd.getNumPartitions`) plans the scan
-    * but runs no job.
-    */
-  /** True when `df`'s scan cannot reach the session's parallelism with
-    * real rows. `rdd.getNumPartitions` alone is NOT the right probe:
-    * Spark's split packing targets bytesPerCore, so even a 2 MB
-    * single-row-group file "plans" 32 byte-range splits — of which all
-    * but the one containing the row-group midpoint are EMPTY (a row
-    * group is the minimum split unit). The honest proxies are the file
-    * count (rows cannot spread wider than row groups, and row groups
-    * cannot spread wider than... at minimum one per file) and the
-    * relation size: fan when the input has fewer FILES than cores AND is
-    * small enough that one extra shuffle is trivially cheap (bounded by
-    * parallelism × maxPartitionBytes — the budget one ordinary scan wave
-    * would read anyway). Any real-scale corpus fails both conditions
-    * (thousands of files, TBs of bytes) and the gate is the identity.
-    * Derived (non-scan) inputs keep the partition-count probe: a
-    * post-shuffle frame below the parallelism fans, a wide one doesn't.
+    * bytes are cheap.
+    *
+    * The gate reads plan facts only — nothing runs, nothing is planned
+    * physically — because it is called while callers are still BUILDING
+    * their frame: an `rdd.getNumPartitions` probe on a frame carrying an
+    * `Observation` fires that observation with zeros (r18's q55 shipped
+    * `n_input=0` under AQE off exactly so). Partition counts are the
+    * wrong fact anyway: Spark's split packing targets bytesPerCore, so
+    * even a 2 MB single-row-group file "plans" 32 byte-range splits, all
+    * but one EMPTY (a row group is the minimum split unit). The honest
+    * proxies are the file count (rows cannot spread wider than one task
+    * per file here) and the relation size: fan when the input has fewer
+    * FILES than cores AND is small enough that one extra shuffle is
+    * trivially cheap (bounded by parallelism × maxPartitionBytes — the
+    * budget one ordinary scan wave would read anyway). Any real-scale
+    * corpus fails both conditions (thousands of files, TBs of bytes) and
+    * the gate is the identity.
     */
   private def needsFanout(df: DataFrame, want: Int): Boolean = {
-    val parts = df.rdd.getNumPartitions
-    if (parts < want) true
-    else {
-      val conf = df.sparkSession.sessionState.conf
-      val budget = BigInt(want.toLong) * conf.filesMaxPartitionBytes
-      df.inputFiles.length < want &&
-        df.queryExecution.optimizedPlan.stats.sizeInBytes < budget
-    }
+    val conf = df.sparkSession.sessionState.conf
+    val budget = BigInt(want.toLong) * conf.filesMaxPartitionBytes
+    df.inputFiles.length < want &&
+      df.queryExecution.optimizedPlan.stats.sizeInBytes < budget
   }
 
   private def fanout(df: DataFrame, keys: Seq[String]): DataFrame = {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,24 +7,10 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER lets ClusterBoundarySpec re-drive this exact
-    // dump under local-cluster[N,C,M] — real executor PROCESSES, real
-    // closure/broadcast serialization (VERDICT r12 item 4; shared with
-    // Bench via SparkBoot since r16).
-    val master = SparkBoot.master(cpus)
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same per-corpus sizing as Bench: without these the 52-query dump
-      // pays single-task post-shuffle stages and per-query codegen
-      // recompilation (cache default is 100 entries — too small)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = SparkBoot.clusterize(builder, master).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // exactly the session Bench times (SparkBoot.session), so the oracle
+    // checks the benched plans; SPARK_GRAFT_MASTER lets ClusterBoundarySpec
+    // re-drive this dump under local-cluster[N,C,M] executor processes
+    val spark = SparkBoot.session(cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

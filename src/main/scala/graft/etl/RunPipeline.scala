@@ -1,7 +1,5 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI twin of the reference's consolidated batch pipeline
   * (E1, `python "import requests.py"` — SURVEY §3): staged binaries in,
   * reference-shaped JSON documents + quarantine report out. Mixed
@@ -20,14 +18,9 @@ object RunPipeline {
     val Array(binaryDir, outDir) = args.take(2)
     val processedDir = args.lift(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the shared base only: production runs keep Spark's default sizing
+    // (DEPLOY.md), not the bench corpus's
+    val spark = graft.SparkBoot.base(cpus)
     import org.apache.spark.sql.functions._
 
     val staged = spark.read.format("binaryFile").load(binaryDir)

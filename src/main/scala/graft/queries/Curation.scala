@@ -2356,8 +2356,9 @@ object Curation {
     */
   def boilerplateScreen(docs: DataFrame): DataFrame = {
     // r18: fan the scan before the shingle kernel — (source, digest) keys
-    // are near-unique, so partials do not multiply (guide §2.5)
-    val sh = graft.Tables.wide(docs, "doc_id").select(col("source"),
+    // are near-unique, so partials do not multiply (guide §2.5). Keyed on
+    // the (source, text) input contract: callers need not carry a doc_id.
+    val sh = graft.Tables.wide(docs, "source", "text").select(col("source"),
       explode(NativeExprs.shingleMd5Prefixes(
         TextOps.tokens(col("text")), 3, 15)).as("dg"))
     sh.groupBy("source", "dg").agg(count(lit(1)).as("ndocs"))

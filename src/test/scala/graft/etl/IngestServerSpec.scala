@@ -85,8 +85,7 @@ class IngestServerSpec extends SparkSpec {
       assert(unknown.contains("\"error\""))
       // statute PDFs still work (statutes/** may be PDF) and carry the
       // statute category
-      val pdfBytes = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/root/reference/vol01.pdf"))
+      val pdfBytes = EthiopicPdfFixture.volume()
       val pdfResp = post(port,
         "/ingest?volume=Statute%20Vol&resource_type=statute",
         pdfBytes, "application/pdf")

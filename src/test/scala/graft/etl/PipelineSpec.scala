@@ -108,27 +108,50 @@ class PipelineSpec extends SparkSpec {
     assert(RawPdfExtractor.extractPages(Array[Byte](0, 1, 2)) === Nil)
   }
 
-  test("reference fixture PDFs parse without error (parser-gated, SURVEY §7.4)") {
-    val vol01 = Files.readAllBytes(java.nio.file.Paths.get("/root/reference/vol01.pdf"))
-    // vol01 uses compressed streams — the raw extractor must degrade to
-    // empty, never throw; the S16 channel handles it downstream.
-    val pages = RawPdfExtractor.extractPages(vol01)
-    assert(pages != null)
+  test("RawPdfExtractor — a compressed CID-font volume degrades to empty, never throws (SURVEY §7.4)") {
+    // the volume's streams are all Flate-compressed — the raw extractor
+    // must degrade to empty, never throw; the S16 channel handles it
+    // downstream
+    assert(RawPdfExtractor.extractPages(EthiopicPdfFixture.volume()) === Nil)
   }
 
-  test("FlatePdfExtractor — real Amharic text from the reference volumes") {
-    val vol01 = Files.readAllBytes(java.nio.file.Paths.get("/root/reference/vol01.pdf"))
+  test("FlatePdfExtractor — Amharic text through Type0/CID fonts and a Flate /ToUnicode CMap") {
+    // the reference volumes' shape: page text shown only as 2-byte CIDs,
+    // recoverable only through the font's compressed CMap
+    assert(FlatePdfExtractor.extractPages(EthiopicPdfFixture.volume()) ===
+      EthiopicPdfFixture.Pages)
+    val one = Seq("ሀሁሂ ሃሄ ህሆ")
+    assert(FlatePdfExtractor.extractPages(EthiopicPdfFixture.volume(one)) === one)
+    // garbage stays containable
+    assert(FlatePdfExtractor.extractPages("junk".getBytes) === Nil)
+    assert(FlatePdfExtractor.extractPages(Array[Byte](1, 2, 3)) === Nil)
+  }
+
+  test("reference snapshot — the real cassation volumes parse, decode Amharic and flow the pipeline") {
+    val vol01 = graft.ReferenceSnapshot.bytes("vol01.pdf")
+    val vol02 = graft.ReferenceSnapshot.bytes("vol02.pdf")
+    // vol01 uses compressed streams — the raw extractor must degrade to
+    // empty, never throw
+    assert(RawPdfExtractor.extractPages(vol01) != null)
     val pages = FlatePdfExtractor.extractPages(vol01)
     assert(pages.nonEmpty, "no pages extracted from vol01.pdf")
     val text = pages.mkString("\n")
     // Ethiopic block U+1200–U+137F — the actual cassation-decision script
     assert(text.exists(c => c >= 'ሀ' && c <= '፿'),
       s"no Ethiopic characters decoded; got: ${text.take(120)}")
-    val vol02 = Files.readAllBytes(java.nio.file.Paths.get("/root/reference/vol02.pdf"))
     assert(FlatePdfExtractor.extractPages(vol02).nonEmpty)
-    // garbage stays containable
-    assert(FlatePdfExtractor.extractPages("junk".getBytes) === Nil)
-    assert(FlatePdfExtractor.extractPages(Array[Byte](1, 2, 3)) === Nil)
+    // E1 over a real volume, and the sniffing route picks the PDF codec
+    val bins = Seq(("https://x/Cassation%20Vol%2001.pdf", vol01))
+      .toDF("url", "content")
+    val out = Pipeline.process(bins, FlatePdfExtractor, "2026-08-12")
+    val doc = out.docs.head()
+    assert(doc.getAs[String]("title") === "Cassation Vol 01")
+    assert(doc.getAs[String]("content").exists(c => c >= 'ሀ' && c <= '፿'))
+    assert(out.quarantine.count() === 0)
+    val sniffed = Pipeline.process(bins, SniffingExtractor(), "2026-08-12",
+      category = DocOps.autoCategory(col("url")))
+    assert(sniffed.docs.head().getAs[String]("content") ===
+      doc.getAs[String]("content"))
   }
 
   test("unsupported filters (DCT/encrypted) degrade to quarantine, never throw (VERDICT r10 #4)") {
@@ -301,10 +324,10 @@ class PipelineSpec extends SparkSpec {
 
   test("SniffingExtractor — mixed PDF+DOCX corpus routes per row by magic bytes (r11)") {
     // the auto_ingest.yml sweep shape: one staged-binary frame holding a
-    // real reference PDF, the checked-in statute DOCX, and garbage — one
-    // process() pass extracts both formats and quarantines the garbage
-    val vol01 = Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/vol01.pdf"))
+    // reference-shaped CID-font volume, the checked-in statute DOCX, and
+    // garbage — one process() pass extracts both formats and quarantines
+    // the garbage
+    val vol01 = EthiopicPdfFixture.volume()
     val docx = Files.readAllBytes(java.nio.file.Paths.get(
       "src/test/resources/fixtures/minimal_statute.docx"))
     val bins = Seq(
@@ -383,15 +406,15 @@ class PipelineSpec extends SparkSpec {
       .contains("Federal Statute"))
   }
 
-  test("E1 with FlatePdfExtractor — full pipeline over a real reference PDF") {
-    import org.apache.spark.sql.functions._
-    val vol01 = Files.readAllBytes(java.nio.file.Paths.get("/root/reference/vol01.pdf"))
-    val bins = Seq(("https://x/Cassation%20Vol%2001.pdf", vol01))
+  test("E1 with FlatePdfExtractor — full pipeline over a reference-shaped CID-font volume") {
+    val bins = Seq(("https://x/Cassation%20Vol%2001.pdf",
+        EthiopicPdfFixture.volume()))
       .toDF("url", "content")
     val out = Pipeline.process(bins, FlatePdfExtractor, "2026-08-12")
     val doc = out.docs.head()
     assert(doc.getAs[String]("title") === "Cassation Vol 01")
-    assert(doc.getAs[String]("content").exists(c => c >= 'ሀ' && c <= '፿'))
+    assert(doc.getAs[String]("content") ===
+      EthiopicPdfFixture.Pages.mkString("\n"))
     assert(out.quarantine.count() === 0)
   }
 

@@ -79,12 +79,8 @@ class TextOpsSpec extends SparkSpec {
     // shipped inside the reference repo — src/test/resources/
     // reference_hrefs_golden.json maps file path -> expected href list.
     // The fixture pages live OUTSIDE the repo (read-only reference mount);
-    // resolve them against a configurable base and cancel (not fail) on a
-    // checkout without that mount.
-    val refBase = sys.env.getOrElse("GRAFT_REFERENCE_DIR",
-      sys.props.getOrElse("graft.reference.dir", "/root/reference"))
-    assume(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(refBase)),
-      s"reference tree absent at $refBase — set GRAFT_REFERENCE_DIR")
+    // ReferenceSnapshot cancels (not fails) on a checkout without it.
+    val refBase = graft.ReferenceSnapshot.path(".")
     val goldenJson = scala.io.Source.fromInputStream(
       getClass.getResourceAsStream("/reference_hrefs_golden.json"), "UTF-8").mkString
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -97,7 +93,7 @@ class TextOpsSpec extends SparkSpec {
     assert(entries.nonEmpty)
     entries.foreach { case (golden, want) =>
       // golden keys are recorded relative to the canonical mount point
-      val path = java.nio.file.Paths.get(refBase)
+      val path = refBase
         .resolve(golden.stripPrefix("/root/reference/")).toString
       val html = new String(
         java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")

@@ -43,25 +43,39 @@ class MultimodalSpec extends SparkSpec {
       (1 to 4).contains(f.channels)))
   }
 
-  test("PDF text via the REAL codec — Ethiopic text from reference vol01 bytes") {
-    // binaryFile ingest of a real reference volume → per-partition decode
+  private def pdfText(dir: String): Seq[Multimodal.DocText] =
+    Multimodal.extractText(
+      spark.read.format("binaryFile")
+        .option("pathGlobFilter", "vol01.pdf").load(dir)
+        .selectExpr("path", "'pdf' as kind", "length", "content")
+        .as[Multimodal.MediaRow](org.apache.spark.sql.Encoders.product),
+      Multimodal.FlatePdfCodec).collect().toSeq
+
+  test("PDF text via the REAL codec — Ethiopic text from a reference-shaped CID-font volume") {
+    // binaryFile ingest of a CID-font Flate volume → per-partition decode
     // through the DocumentCodec seam — no stub anywhere on this path
-    val media = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "vol01.pdf").load("/root/reference")
-      .selectExpr("path", "'pdf' as kind", "length", "content")
-      .as[Multimodal.MediaRow](org.apache.spark.sql.Encoders.product)
-    val docs = Multimodal.extractText(media, Multimodal.FlatePdfCodec).collect()
+    val dir = Files.createTempDirectory("graft_vol")
+    Files.write(dir.resolve("vol01.pdf"), graft.etl.EthiopicPdfFixture.volume())
+    val docs = pdfText(dir.toString)
     assert(docs.length === 1)
-    assert(docs.head.nPages > 0, "no pages decoded from vol01.pdf")
-    // Ethiopic block U+1200–U+137F — the actual cassation-decision script
-    assert(docs.head.text.exists(c => c >= 'ሀ' && c <= '፿'),
-      s"no Ethiopic characters decoded; got: ${docs.head.text.take(120)}")
+    assert(docs.head.nPages === graft.etl.EthiopicPdfFixture.Pages.size)
+    assert(docs.head.text.split("\n").toSeq === graft.etl.EthiopicPdfFixture.Pages,
+      s"got: ${docs.head.text.take(120)}")
     // garbage bytes flow through as empty docs, never throw
     import spark.implicits._
     val junk = Seq(Multimodal.MediaRow("junk", "pdf", 4L,
       Array[Byte](1, 2, 3, 4))).toDS()
     val jr = Multimodal.extractText(junk, Multimodal.FlatePdfCodec).collect()
     assert(jr.head.nPages === 0 && jr.head.text.isEmpty)
+  }
+
+  test("reference snapshot — Ethiopic text from the real vol01 bytes") {
+    val docs = pdfText(graft.ReferenceSnapshot.path("vol01.pdf").getParent.toString)
+    assert(docs.length === 1)
+    assert(docs.head.nPages > 0, "no pages decoded from vol01.pdf")
+    // Ethiopic block U+1200–U+137F — the actual cassation-decision script
+    assert(docs.head.text.exists(c => c >= 'ሀ' && c <= '፿'),
+      s"no Ethiopic characters decoded; got: ${docs.head.text.take(120)}")
   }
 
   test("passworded PDF text via PasswordedPdfCodec — executor-side decrypt+decode (r15)") {

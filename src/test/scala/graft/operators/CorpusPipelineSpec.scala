@@ -40,6 +40,36 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(row.getDouble(2) >= 0.0 && row.getDouble(2) <= 1.0)
   }
 
+  test("curate — accounting holds under the bench config (AQE off) with scan fanout firing") {
+    // the q55 shape at sf0.01 under the bench's AQE-off, width-8 config
+    // (SparkBoot.session) on a one-file corpus, so the fanout fires; the gate
+    // runs while curate() is building frames that carry Observations, and
+    // a gate that probed the frame (rdd.getNumPartitions) fired those
+    // observations with zeros — n_input 0, dropped_contaminated -333
+    val confs = Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "8")
+    val saved = confs.map { case (k, _) => k -> spark.conf.get(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val docs = Tables.documents(spark, sf001).select("doc_id", "text")
+      val input = docs.filter($"doc_id" >= 5)
+      val fanned = Tables.wide(input, "doc_id").queryExecution.logical
+      assert(fanned.exists(_.nodeName == "RepartitionByExpression"),
+        s"fanout must fire on a one-file corpus:\n$fanned")
+      val r = CorpusPipeline.curate(input, "doc_id", "text",
+        CorpusPipeline.Config(exactNearDup = true),
+        Some(docs.filter($"doc_id" < 5)))
+      val n0 = input.count()
+      val kept = r.corpus.count()
+      r.corpus.unpersist()
+      // the DuckDB-oracled q55 row: n_input, n_kept, then the four drops
+      assert((n0, kept, r.droppedExact, r.droppedNearDup,
+          r.droppedContaminated, r.droppedQuality) ===
+        ((495L, 104L, 0L, 24L, 138L, 229L)), r)
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    spark.catalog.clearCache()
+  }
+
   test("curate — stage 2b drops benchmark-contaminated docs, accounting adds up") {
     // doc 20 shares a full 3-shingle run with the "benchmark" doc; docs 10
     // and 30 share nothing with it. maxBenchOverlap = 0 → only 20 drops.
