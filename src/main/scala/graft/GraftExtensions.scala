@@ -27,8 +27,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // optimizer rule: idiomatic HOF shapes → native expressions
+    // optimizer rules: idiomatic HOF shapes → native expressions; narrow
+    // scans fanned out before per-row kernels
     ext.injectOptimizerRule(_ => NativizeHofRule)
+    ext.injectPreCBORule(ScanFanoutRule)
 
     def register(name: String, usage: String)(b: Seq[Expression] => Expression): Unit =
       ext.injectFunction((FunctionIdentifier(name),

@@ -403,7 +403,7 @@ object NativeExprs {
   * email matches" — which is what the segment-wise scan emits.
   */
 case class RedactExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback with RowKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = StructType(Seq(
     StructField("redacted", StringType, nullable = false),
@@ -743,7 +743,7 @@ case class JsonIntFieldExpr(child: Expression, key: String)
 
 /** See [[NativeExprs.shingleStats]]. */
 case class ShingleStatsExpr(child: Expression, w: Int)
-    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback with RowKernel {
   require(w >= 1)
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = StructType(Seq(
@@ -777,7 +777,7 @@ case class ShingleStatsExpr(child: Expression, w: Int)
 
 /** See [[NativeExprs.distinctSortedPrefix]]. */
 case class DistinctSortedPrefixExpr(child: Expression, k: Int)
-    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback with RowKernel {
   require(k >= 1)
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = StructType(Seq(
@@ -837,7 +837,7 @@ case class DistinctSortedPrefixExpr(child: Expression, k: Int)
   * regexp_extract at every input, fast path on ASCII-neighboured text.
   */
 case class YearExtractExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends UnaryExpression with ExpectsInputTypes with RowKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = StringType
   override def prettyName: String = "year_extract"
@@ -894,7 +894,7 @@ object YearScan {
 
 /** See [[NativeExprs.lowerAlnumRunCount]]. */
 case class CharClassRunCountExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends UnaryExpression with ExpectsInputTypes with RowKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "lower_alnum_run_count"
@@ -1045,7 +1045,7 @@ private[graft] final class LongBottomK(k: Int) {
   * bounded distinct-bottom-k insertion buffer as [[RollingBottomKExpr]].
   */
 case class Md5WindowBottomKExpr(child: Expression, w: Int, k: Int)
-    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback with RowKernel {
   require(w >= 1 && k >= 1)
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -1124,7 +1124,7 @@ case class HyperplaneBucketExpr(child: Expression, planes: Seq[Seq[Double]])
 }
 
 case class CountInSetExpr(child: Expression, words: Seq[String])
-    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback with RowKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = IntegerType
   override def prettyName: String = "count_in_set"
@@ -1153,7 +1153,7 @@ case class CountInSetExpr(child: Expression, words: Seq[String])
 }
 
 case class LangIdExpr(child: Expression, langs: Seq[(String, Seq[String])])
-    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback with RowKernel {
   require(langs.nonEmpty && langs.size <= 30)
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = StringType
@@ -1214,7 +1214,7 @@ case class LangIdExpr(child: Expression, langs: Seq[(String, Seq[String])])
 }
 
 case class ShinglesExpr(child: Expression, w: Int)
-    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback with RowKernel {
   require(w >= 1)
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -1654,7 +1654,7 @@ trait CachedCentroidCodebook {
   */
 case class NearestCentroidL2(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes with CodegenFallback
-    with CachedCentroidCodebook {
+    with CachedCentroidCodebook with RowKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(
     ArrayType(LongType),
     ArrayType(StructType(Seq(
@@ -1858,7 +1858,7 @@ case class NearestKCentroidsL2(left: Expression, right: Expression, k: Int)
 
 /** See [[NativeExprs.l2SqLong]]. */
 case class L2SqLong(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
+    extends BinaryExpression with ExpectsInputTypes with RowKernel {
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = LongType
@@ -2048,7 +2048,7 @@ private[graft] object ShingleMd5 {
 }
 
 case class ShingleMd5PrefixExpr(child: Expression, w: Int, hexDigits: Int)
-    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback with RowKernel {
   require(w >= 1 && hexDigits >= 1 && hexDigits <= 15)
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -2092,7 +2092,7 @@ case class ShingleMd5PrefixExpr(child: Expression, w: Int, hexDigits: Int)
   * array_min's empty/all-null → null.
   */
 case class LshMinSigExpr(child: Expression, nPerms: Int)
-    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback with RowKernel {
   require(nPerms >= 1 && nPerms <= 512)
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
@@ -2136,7 +2136,7 @@ case class LshMinSigExpr(child: Expression, nPerms: Int)
 }
 
 case class ShingleMd5BottomKExpr(child: Expression, w: Int, k: Int)
-    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback with RowKernel {
   require(w >= 1 && k >= 1)
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -2160,7 +2160,7 @@ case class ShingleMd5BottomKExpr(child: Expression, w: Int, k: Int)
 }
 
 case class Simhash32Expr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback with RowKernel {
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash32"
@@ -2415,7 +2415,7 @@ object SpanMix {
   * boxed InternalRow per span). A NULL token array yields an empty ladder.
   */
 case class SpanLadderPackedExpr(child: Expression, levels: Int)
-    extends UnaryExpression with ExpectsInputTypes {
+    extends UnaryExpression with ExpectsInputTypes with RowKernel {
   require(levels >= 1 && levels <= 7, "levels out of range (3 tag bits)")
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)

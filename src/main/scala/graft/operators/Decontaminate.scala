@@ -36,9 +36,7 @@ object Decontaminate {
     */
   def shingleSet(docs: DataFrame, idCol: String, textCol: String,
                  w: Int = 3, hexDigits: Int = 15): DataFrame =
-    // r18: fan the scan before the tokenize+md5 kernel (single-row-group
-    // file = one task; identity at real scale — guide §2.5)
-    graft.Tables.wide(docs, idCol).select(col(idCol),
+    docs.select(col(idCol),
       explode(NativeExprs.shingleMd5Prefixes(
         TextOps.tokens(col(textCol)), w, hexDigits)).as("sh"))
 

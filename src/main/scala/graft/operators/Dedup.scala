@@ -49,12 +49,7 @@ object Dedup {
   def coShingledPairs(docs: DataFrame, idCol: String, textCol: String,
                       w: Int = 3, broadcastCounts: Boolean = true):
       (DataFrame, DataFrame) = {
-    // r18: fan the doc scan out to the session's parallelism BEFORE the
-    // shingle kernel when the scan plans fewer partitions (a single-row-
-    // group file is one task — the tokenize+md5 map ran single-threaded
-    // at any core count); identity at real scale (guide §2.5 input skew)
-    val raw = graft.Tables.wide(docs, idCol)
-      .select(col(idCol).as("doc_id"),
+    val raw = docs.select(col(idCol).as("doc_id"),
         explode(graft.functions.expressions.NativeExprs
           .shingleMd5Prefixes(TextOps.tokens(col(textCol)), w, 15)).as("s"))
     // the pre-persist co-partition only pays when the planner will TRUST
@@ -80,8 +75,7 @@ object Dedup {
   def coShingledPairsDetached(docs: DataFrame, idCol: String, textCol: String,
                               w: Int = 3, broadcastCounts: Boolean = true):
       DataFrame = {
-    val sh = graft.Tables.wide(docs, idCol)
-      .select(col(idCol).as("doc_id"),
+    val sh = docs.select(col(idCol).as("doc_id"),
         explode(graft.functions.expressions.NativeExprs
           .shingleMd5Prefixes(TextOps.tokens(col(textCol)), w, 15)).as("s"))
     pairsFrom(sh, broadcastCounts)
@@ -128,7 +122,7 @@ object Dedup {
                    maxHamming: Int = 3): DataFrame = {
     val nBands = maxHamming + 1
     val bandBits = 32 / nBands
-    val fp = graft.Tables.wide(docs, idCol).select(col(idCol).as("id"),
+    val fp = docs.select(col(idCol).as("id"),
       TextOps.simhash32(TextOps.tokens(col(textCol))).as("fp"))
     val banded = fp.select(col("id"), col("fp"),
       explode(array((0 until nBands).map(b =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.functions.TextOps
+import org.apache.spark.sql.graft.RowKernel
 
 /** Exact top-k heavy hitters under BOUNDED memory — the 100 TB alternative
   * to q26's full token-universe groupBy. At web scale the distinct-token
@@ -48,7 +49,7 @@ object HeavyHitters {
     * delta is).
     */
   final class MisraGriesAgg(m: Int)
-      extends Aggregator[Seq[String], MGSummary, MGSummary] {
+      extends Aggregator[Seq[String], MGSummary, MGSummary] with RowKernel {
     require(m > 0, "MisraGries capacity must be positive")
 
     def zero: MGSummary = MGSummary(Map.empty, 0L)
@@ -97,12 +98,7 @@ object HeavyHitters {
     */
   def summarize(docs: DataFrame, textCol: String, m: Int): MGSummary = {
     val mg = udaf(new MisraGriesAgg(m))
-    // r18: fan the scan before the tokenize+fold pass — each task ships one
-    // bounded ≤m buffer whatever the partition count, so fanning costs no
-    // extra shuffle rows (and the certificate is partitioning-independent
-    // by the merge invariant); identity at real scale (guide §2.5)
-    val row = graft.Tables.wide(docs, docs.columns.head)
-      .select(mg(TextOps.tokens(col(textCol))).as("s"))
+    val row = docs.select(mg(TextOps.tokens(col(textCol))).as("s"))
       .head()
     val s = row.getStruct(0)
     MGSummary(s.getMap[String, Long](0).toMap, s.getLong(1))
@@ -118,8 +114,7 @@ object HeavyHitters {
     val summary = summarize(docs, textCol, m)
     // deterministic literal order (map iteration order is not)
     val cand = summary.counts.keys.toArray.sorted
-    val exact = graft.Tables.wide(docs, docs.columns.head)
-      .select(explode(TextOps.tokens(col(textCol))).as("token"))
+    val exact = docs.select(explode(TextOps.tokens(col(textCol))).as("token"))
       .where(col("token").isin(cand.toIndexedSeq: _*))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("token"))

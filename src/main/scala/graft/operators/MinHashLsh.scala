@@ -114,8 +114,7 @@ object MinHashLsh {
     */
   def signatures(docs: DataFrame, docId: String, text: String, w: Int = 3,
                  bands: Int = 24, rowsPerBand: Int = 2): DataFrame =
-    graft.Tables.wide(docs, docId)
-      .select(col(docId).as("doc_id"),
+    docs.select(col(docId).as("doc_id"),
         graft.functions.expressions.NativeExprs
           .shingleMd5Prefixes(TextOps.tokens(col(text)), w, 7)
           .as("hashes"))

@@ -174,11 +174,7 @@ object Curation {
       : (DataFrame, DataFrame) = {
     val rowsPerBand = nPerms / nBands
     require(nBands * rowsPerBand == nPerms, "bands must tile the signature")
-    // r18: fan the scan to the session parallelism before the shingle +
-    // 16-perm md5 kernel (single-row-group file = one task; identity at
-    // real scale — guide §2.5)
-    val toks = graft.Tables.wide(docs, "doc_id")
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
+    val toks = docs.select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
     // per-doc DISTINCT shingle strings as an array — array_distinct is
     // per-row, so doc-local dedup costs no shuffle (vs q31's digest
     // explode this keeps the strings: they are the md5 preimage here).
@@ -1650,10 +1646,7 @@ object Curation {
     // assignment pass and the routing pass — both are map-only (no
     // crossJoin, no broadcast builds)
     val arr = refineCodebookArr(emb)
-    // r18: fan the corpus side for the assignment map + inverted-file join
-    // (the Lloyd loop above keeps the plain cached frame — its per-iteration
-    // collects are codebook-sized and gain nothing from extra tasks)
-    val asg = assignToCent(graft.Tables.wide(emb, "vec_id"), arr)
+    val asg = assignToCent(emb, arr)
     val routed = emb.filter(col("vec_id") % everyNth === 0)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
         explode(NativeExprs.nearestKCentroidsL2(col("v"), centsLit(arr), nProbe))
@@ -1686,10 +1679,7 @@ object Curation {
                 probes: Seq[Int] = Seq(1, 2, 4, 8), k: Int = 5): DataFrame = {
     val maxProbe = probes.max
     val arr = refineCodebookArr(emb)
-    // r18: same corpus-side fanout as ivfRoute — assignment join and the
-    // brute-force truth scan parallelize; Lloyd stays on the plain frame
-    val embW = graft.Tables.wide(emb, "vec_id")
-    val asg = assignToCent(embW, arr)
+    val asg = assignToCent(emb, arr)
     val queries = emb.filter(col("vec_id") % everyNth === 0)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val routed = queries
@@ -1711,7 +1701,7 @@ object Curation {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // exact truth: flat scan with the query batch broadcast; the q81
     // double-buffer bound applies (max dist 2.6e10 ≪ 2^53, negation exact)
-    val truthScored = embW.crossJoin(broadcast(queries))
+    val truthScored = emb.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid"),
         (-NativeExprs.l2SqLong(col("qv"), col("v")).cast(DoubleType))
@@ -2355,10 +2345,7 @@ object Curation {
     * mixes.
     */
   def boilerplateScreen(docs: DataFrame): DataFrame = {
-    // r18: fan the scan before the shingle kernel — (source, digest) keys
-    // are near-unique, so partials do not multiply (guide §2.5). Keyed on
-    // the (source, text) input contract: callers need not carry a doc_id.
-    val sh = graft.Tables.wide(docs, "source", "text").select(col("source"),
+    val sh = docs.select(col("source"),
       explode(NativeExprs.shingleMd5Prefixes(
         TextOps.tokens(col("text")), 3, 15)).as("dg"))
     sh.groupBy("source", "dg").agg(count(lit(1)).as("ndocs"))
@@ -2524,9 +2511,7 @@ object Curation {
       val idsDf = (pr.map(_._1) ++ pr.map(_._2)).distinct.sorted.toSeq
         .toDF("doc_id")
       spark.sparkContext.setJobDescription("minhashest: signature collect")
-      // r18: fan the participant scan before the 16-perm md5 kernel
-      val sig = graft.Tables.wide(docs, "doc_id")
-        .join(broadcast(idsDf), Seq("doc_id"), "leftsemi")
+      val sig = docs.join(broadcast(idsDf), Seq("doc_id"), "leftsemi")
         .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
         .select(col("doc_id"),
           array_distinct(NativeExprs.shingles(col("toks"), 3)).as("shs"))
@@ -2558,7 +2543,7 @@ object Curation {
     // agreement stage is two broadcast joins — no explode, no (j, p)
     // shuffle, no re-aggregation barrier (DevQ89: 2.0–2.7 → 1.6–2.0 s
     // fresh-cache, exact row parity)
-    val sigs = graft.Tables.wide(docs, "doc_id").join(ids, Seq("doc_id"), "leftsemi")
+    val sigs = docs.join(ids, Seq("doc_id"), "leftsemi")
       .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
       .select(col("doc_id"),
         array_distinct(NativeExprs.shingles(col("toks"), 3)).as("shs"))

@@ -312,7 +312,7 @@ object Llm {
         |SELECT doc_id,
         |  CAST(sum(CASE WHEN sv >= 0 THEN (CAST(1 AS BIGINT) << (31 - b)) ELSE 0 END) AS BIGINT) AS simhash
         |FROM s GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
-      Tables.wideOrdered(Tables.documents(s, d), "doc_id")
+      Tables.documents(s, d)
         .select(col("doc_id"),
                 TextOps.simhash32(TextOps.tokens(col("text"))).as("simhash"))
         .orderBy("doc_id")
@@ -338,7 +338,7 @@ object Llm {
       val n = size(toks)
       val hits = TextOps.stopwordHits(toks, stop)
       val stopRatio = hits * 1.0 / n
-      Tables.wideOrdered(Tables.documents(s, d), "doc_id")
+      Tables.documents(s, d)
         .withColumn("toks", TextOps.tokens(col("text")))
         .select(col("doc_id"),
                 n.cast(LongType).as("n_tokens"),
@@ -356,7 +356,7 @@ object Llm {
         |  CAST(len(regexp_extract_all(text, '[a-z0-9]+')) AS BIGINT) AS re_tokens,
         |  CAST(length(text) AS BIGINT) AS n_chars_txt
         |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
-      Tables.wideOrdered(Tables.documents(s, d), "doc_id")
+      Tables.documents(s, d)
         .select(col("doc_id"),
                 size(split(col("text"), " ")).cast(LongType).as("ws_tokens"),
                 // native single-pass run count — value-identical to
@@ -383,7 +383,7 @@ object Llm {
         |SELECT d.doc_id, coalesce(fp.fp, '') AS fp
         |FROM documents d LEFT JOIN fp ON d.doc_id = fp.doc_id
         |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
-      Tables.wideOrdered(Tables.documents(s, d), "doc_id")
+      Tables.documents(s, d)
         .select(col("doc_id"),
           array_join(graft.functions.expressions.NativeExprs.shingleMd5BottomK(
             TextOps.tokens(col("text")), 3, 4), "|")
@@ -402,7 +402,7 @@ object Llm {
         |      % 1000000
         |  < CASE lang WHEN 'en' THEN 250000 WHEN 'de' THEN 500000 ELSE 1000000 END
         |ORDER BY doc_id""".stripMargin) { (s, d) =>
-      Sampling.stratified(Tables.wideOrdered(Tables.documents(s, d), "doc_id"),
+      Sampling.stratified(Tables.documents(s, d),
           "lang", "doc_id", Map("en" -> 0.25, "de" -> 0.5), default = 1.0)
         .select("doc_id", "lang")
         .orderBy("doc_id")
@@ -456,7 +456,7 @@ object Llm {
       // java-regex passes of the composed form were the single largest
       // absolute gap vs the oracle in BENCH_r02. Value-identity to the
       // regexp formulation is proven in NativeExprsSpec.
-      Tables.wideOrdered(Tables.documents(s, d), "doc_id")
+      Tables.documents(s, d)
         .withColumn("r", graft.functions.expressions.NativeExprs.redact(col("text")))
         .select(col("doc_id"),
           col("r.redacted").as("redacted"),
@@ -491,7 +491,7 @@ object Llm {
       // value-identity to the size/array_distinct composition
       val nSh = col("st.n_shingles")
       val nUniq = col("st.n_uniq")
-      Tables.wideOrdered(Tables.documents(s, d), "doc_id")
+      Tables.documents(s, d)
         .withColumn("st", graft.functions.expressions.NativeExprs
           .shingleStats(TextOps.tokens(col("text")), 3))
         .select(col("doc_id"),
@@ -588,7 +588,7 @@ object Llm {
         |       coalesce(string_agg(CAST(bk.h AS VARCHAR), '|' ORDER BY bk.h), '') AS fp
         |FROM documents d LEFT JOIN bk ON bk.doc_id = d.doc_id
         |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin) { (s, d) =>
-      Tables.wideOrdered(Tables.documents(s, d), "doc_id")
+      Tables.documents(s, d)
         .select(col("doc_id"),
           array_join(transform(
             graft.functions.expressions.NativeExprs
@@ -602,7 +602,7 @@ object Llm {
         |counts (tie → smallest code, none → 'und'). A single narrow map —
         |no shuffle — so it scales with the scan.""".stripMargin,
       q38OracleSql) { (s, d) =>
-      Tables.wideOrdered(Tables.documents(s, d), "doc_id")
+      Tables.documents(s, d)
         .select(col("doc_id"),
                 TextOps.langId(TextOps.tokens(col("text"))).as("pred"))
         .orderBy("doc_id")
@@ -1263,10 +1263,7 @@ object Llm {
         |                 unnest(generate_series(1, len(toks) - 64 + 1)) AS t(i))
         |      GROUP BY s HAVING count(*) >= 2)
         |ORDER BY span_len""".stripMargin) { (s, d) =>
-      // r18: fan the scan before the ladder kernel — the packed span
-      // digests are near-unique (count>=2 cut), so 32-way partials do not
-      // multiply the exchange; identity at real scale (guide §2.5)
-      val spans = Tables.wide(Tables.documents(s, d), "doc_id")
+      val spans = Tables.documents(s, d)
         .select(explode(graft.functions.expressions.NativeExprs
           .spanDigestLadderPacked(TextOps.tokens(col("text")), 6)).as("pk"))
       val agg = spans

@@ -73,7 +73,7 @@ object Relational {
       """SELECT doc_id, lang, source, n_chars FROM documents
         |WHERE lang IN ('en','fr') AND n_chars BETWEEN 100 AND 5000
         |ORDER BY doc_id""".stripMargin) { (s, d) =>
-      Tables.wideOrdered(Tables.documents(s, d), "doc_id")
+      Tables.documents(s, d)
         .filter(col("lang").isin("en", "fr") && col("n_chars").between(100, 5000))
         .select("doc_id", "lang", "source", "n_chars")
         .orderBy("doc_id")
@@ -704,7 +704,7 @@ object Relational {
       val base = regexp_replace(
         regexp_replace(regexp_extract(col("url"), "[^/]+$", 0), "%20", "_"),
         "\\.pdf$", "")
-      Tables.wideOrdered(Tables.documents(s, d), "doc_id")
+      Tables.documents(s, d)
         .withColumn("url",
           concat(lit("https://ex.org/archive/Vol%20"),
                  lpad(col("doc_id").cast(StringType), 4, "0"),
@@ -800,7 +800,7 @@ object Relational {
       // distinct-count and sorted prefix fused into one native pass
       // (value-identical to size(array_distinct(.)) +
       // slice(array_sort(array_distinct(.)), 1, 3) — NativeExprsSpec)
-      Tables.wideOrdered(Tables.documents(s, d), "doc_id")
+      Tables.documents(s, d)
         .withColumn("toks", split(col("text"), " "))
         .withColumn("ds", graft.functions.expressions.NativeExprs
           .distinctSortedPrefix(col("toks"), 3))

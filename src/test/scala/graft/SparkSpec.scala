@@ -48,4 +48,54 @@ object SpecHelpers {
     val le = sorted.count(ord.lteq(_, v))
     lt <= target && target <= le + 1
   }
+
+  import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+
+  /** Every node of a physical plan INCLUDING persisted subtrees (a builder
+    * persist hides its subplan inside InMemoryRelation.cachedPlan, which a
+    * plain collect never visits — the q31 cached-exchange lesson) and
+    * AQE's current plan and query stages.
+    */
+  def deepNodes(p: SparkPlan): Seq[SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    p.collect { case n => n }.flatMap {
+      case s: InMemoryTableScanExec => s +: deepNodes(s.relation.cachedPlan)
+      case a: AdaptiveSparkPlanExec => a +: deepNodes(a.executedPlan)
+      case q: QueryStageExec => q +: deepNodes(q.plan)
+      case n => Seq(n)
+    }
+  }
+
+  /** The scan-fanout exchanges of a plan: ScanFanoutRule's
+    * RepartitionByExpression(…, n) plans as a REPARTITION_BY_NUM shuffle.
+    */
+  def fanouts(p: SparkPlan): Int = {
+    import org.apache.spark.sql.execution.exchange.{ShuffleExchangeExec, REPARTITION_BY_NUM}
+    deepNodes(p).count {
+      case s: ShuffleExchangeExec => s.shuffleOrigin == REPARTITION_BY_NUM
+      case _ => false
+    }
+  }
+
+  /** Runs `body` and returns its value with the physical plans of every
+    * query it executed (builders that collect eagerly run plans the
+    * returned frame does not show).
+    */
+  def executedPlans[A](spark: org.apache.spark.sql.SparkSession)(body: => A)
+      : (A, Seq[SparkPlan]) = {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.synchronized(seen += qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.GraftListenerDrain.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val a = body
+      org.apache.spark.GraftListenerDrain.drain(spark.sparkContext)
+      (a, seen.synchronized(seen.toList))
+    } finally spark.listenerManager.unregister(listener)
+  }
 }

@@ -42,10 +42,10 @@ class CorpusPipelineSpec extends SparkSpec {
 
   test("curate — accounting holds under the bench config (AQE off) with scan fanout firing") {
     // the q55 shape at sf0.01 under the bench's AQE-off, width-8 config
-    // (SparkBoot.session) on a one-file corpus, so the fanout fires; the gate
-    // runs while curate() is building frames that carry Observations, and
-    // a gate that probed the frame (rdd.getNumPartitions) fired those
-    // observations with zeros — n_input 0, dropped_contaminated -333
+    // (SparkBoot.session) on a one-file corpus, so ScanFanoutRule fans the
+    // shingle scan curate() runs while its Observations are in flight (a
+    // build-time gate that probed the frame with rdd.getNumPartitions fired
+    // those observations with zeros — n_input 0, dropped_contaminated -333)
     val confs = Seq("spark.sql.adaptive.enabled" -> "false",
       "spark.sql.shuffle.partitions" -> "8")
     val saved = confs.map { case (k, _) => k -> spark.conf.get(k) }
@@ -53,12 +53,13 @@ class CorpusPipelineSpec extends SparkSpec {
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       val docs = Tables.documents(spark, sf001).select("doc_id", "text")
       val input = docs.filter($"doc_id" >= 5)
-      val fanned = Tables.wide(input, "doc_id").queryExecution.logical
-      assert(fanned.exists(_.nodeName == "RepartitionByExpression"),
-        s"fanout must fire on a one-file corpus:\n$fanned")
-      val r = CorpusPipeline.curate(input, "doc_id", "text",
-        CorpusPipeline.Config(exactNearDup = true),
-        Some(docs.filter($"doc_id" < 5)))
+      val (r, plans) = graft.SpecHelpers.executedPlans(spark) {
+        CorpusPipeline.curate(input, "doc_id", "text",
+          CorpusPipeline.Config(exactNearDup = true),
+          Some(docs.filter($"doc_id" < 5)))
+      }
+      assert(plans.exists(graft.SpecHelpers.fanouts(_) > 0),
+        s"fanout must fire on a one-file corpus:\n${plans.mkString("\n")}")
       val n0 = input.count()
       val kept = r.corpus.count()
       r.corpus.unpersist()

@@ -64,6 +64,25 @@ class AqeParitySpec extends SparkSpec {
         diverged.mkString(", "))
   }
 
+  test("every fanned catalog entry returns identical rows with the scan fanout rule on and excluded") {
+    // ROADMAP item 3: fanout is a layout decision and must never change an
+    // answer. Bench config both ways; off = Spark's own excludedRules.
+    // Compared as row multisets: entries without a final ORDER BY return
+    // rows in partition order.
+    val off = "spark.sql.optimizer.excludedRules" ->
+      classOf[org.apache.spark.sql.graft.ScanFanoutRule].getName
+    def sorted(rs: Seq[Seq[Any]]) = rs.map(_.mkString("\u0001")).sorted
+    val diverged = PlanShapeSpec.fanned.toSeq.sorted.filter { n =>
+      val on = withConfigs(aqeOn = false, width = "8")(rows(n, sf001))
+      spark.conf.set(off._1, off._2)
+      val without =
+        try withConfigs(aqeOn = false, width = "8")(rows(n, sf001))
+        finally spark.conf.unset(off._1)
+      sorted(on) != sorted(without)
+    }
+    assert(diverged.isEmpty, s"scan fanout changed the rows of: ${diverged.mkString(", ")}")
+  }
+
   test("routed q107b/q110b scale paths honor the GK rank contract vs exact under the cluster config") {
     import org.apache.spark.sql.functions._
     val ev = graft.Tables.events(spark, sf0001)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkSpec, SpecHelpers, Tables}
 
 /** Physical-plan audits (the "explain and iterate" discipline): these pin
   * the plan shapes that matter at 100 TB — pushdown reaching the scan,
@@ -175,6 +175,20 @@ class PlanShapeSpec extends SparkSpec {
     val globalWindowOk = Set("q20_ntile", "q126_rfm_segments")
     val offendersNl = scala.collection.mutable.ArrayBuffer.empty[String]
     val offendersWin = scala.collection.mutable.ArrayBuffer.empty[String]
+    // scan fanout (ScanFanoutRule) reaches only per-row kernels over the
+    // corpus tables: an entry fans when any plan it executes or returns
+    // holds a REPARTITION_BY_NUM exchange, and one that reads neither
+    // documents nor embeddings never may — the star-schema and events
+    // queries measured slower under table-level fanout
+    val fanned = scala.collection.mutable.ArrayBuffer.empty[String]
+    val offendersFan = scala.collection.mutable.ArrayBuffer.empty[String]
+    def readsCorpus(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
+      SpecHelpers.deepNodes(p).exists {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          s.relation.location.rootPaths.exists(r =>
+            Set("documents.parquet", "embeddings.parquet")(r.getName))
+        case _ => false
+      }
     // q55 is the COMPOSITE pipeline entry: its builder executes curate()
     // eagerly and returns a 1-row local accounting frame, so linting its
     // "plan" would inspect a LocalRelation and prove nothing — and would
@@ -183,7 +197,17 @@ class PlanShapeSpec extends SparkSpec {
     // and CorpusPipelineSpec's bounded-state/persist assertions; declare
     // the exemption here instead of letting it pass vacuously.
     Catalog.all.filterNot(_.name == "q55_curate").foreach { q =>
-      val qe = q.build(spark, sf0001).queryExecution
+      spark.catalog.clearCache()
+      val (qe, eager) = SpecHelpers.executedPlans(spark) {
+        val qe = q.build(spark, sf0001).queryExecution
+        qe.executedPlan
+        qe
+      }
+      val plans = qe.executedPlan +: eager
+      if (plans.exists(SpecHelpers.fanouts(_) > 0)) {
+        fanned += q.name
+        if (!plans.exists(readsCorpus)) offendersFan += q.name
+      }
       val physical = qe.executedPlan.toString
       if ((physical.contains("BroadcastNestedLoopJoin") ||
            physical.contains("CartesianProduct")) &&
@@ -202,8 +226,13 @@ class PlanShapeSpec extends SparkSpec {
       }.nonEmpty
       if (hasGlobalWindow && !globalWindowOk(q.name)) offendersWin += q.name
     }
+    spark.catalog.clearCache()
     assert(offendersNl.isEmpty, s"undeclared nested-loop joins in: $offendersNl")
     assert(offendersWin.isEmpty, s"undeclared global windows in: $offendersWin")
+    assert(offendersFan.isEmpty, s"fanout outside the corpus tables in: $offendersFan")
+    assert(fanned.toSet == PlanShapeSpec.fanned,
+      s"fanned set drifted — added: ${fanned.toSet -- PlanShapeSpec.fanned}, " +
+        s"lost: ${PlanShapeSpec.fanned -- fanned}")
   }
 
   test("q45 — the document-frequency join is never a FORCED broadcast") {
@@ -337,18 +366,6 @@ class PlanShapeSpec extends SparkSpec {
     assert(exchanges <= 2, s"q39 shuffles beyond the final sort:\n$p")
   }
 
-  // collect plan nodes INCLUDING persisted subtrees — a builder persist
-  // hides its subplan inside InMemoryRelation.cachedPlan, which a plain
-  // collect never visits (the q31 cached-exchange lesson)
-  private def deepNodes(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    p.collect { case n => n }.flatMap {
-      case s: InMemoryTableScanExec => s +: deepNodes(s.relation.cachedPlan)
-      case n => Seq(n)
-    }
-  }
-
   test("q98/q111 — one event-stream exchange; pairs expand post-reduction") {
     // the sessionize window's user exchange is the ONLY shuffle the raw
     // event stream pays; the (user, sid) aggregate rides it
@@ -362,7 +379,7 @@ class PlanShapeSpec extends SparkSpec {
         .queryExecution.executedPlan
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
       import org.apache.spark.sql.execution.window.WindowExec
-      val wins = deepNodes(executed).collect { case w: WindowExec => w }
+      val wins = SpecHelpers.deepNodes(executed).collect { case w: WindowExec => w }
       assert(wins.nonEmpty, s"$name lost the sessionize window:\n$executed")
       // every exchange inside any window subtree hashes on user_id —
       // the raw stream is never re-shuffled for the session aggregate
@@ -386,7 +403,7 @@ class PlanShapeSpec extends SparkSpec {
       val executed = Catalog.byName(name).build(spark, sf0001)
         .queryExecution.executedPlan
       import org.apache.spark.sql.execution.window.WindowExec
-      val wins = deepNodes(executed).collect { case w: WindowExec => w }
+      val wins = SpecHelpers.deepNodes(executed).collect { case w: WindowExec => w }
       assert(wins.nonEmpty, s"$name lost its cumulative window:\n$executed")
       wins.foreach { w =>
         assert(w.exists(p => p.getClass.getSimpleName.contains("HashAggregate")),
@@ -441,11 +458,14 @@ class PlanShapeSpec extends SparkSpec {
       s"q57's window no longer rides the reduced table:\n${windows.head}")
   }
 
-  test("text kernels — q27/q36/q42/q43 are narrow maps: one exchange (final sort), no join") {
+  test("text kernels — q23/q26b/q27/q34–q39/q42/q43 are narrow maps: one exchange (final sort), no join") {
     // the per-document text queries must scale with the scan: their only
-    // shuffle is the final deterministic ORDER BY (q27 additionally
-    // aggregates, giving it one more exchange), and no join appears
-    Seq("q36_token_count", "q42_redaction", "q43_repetition").foreach { q =>
+    // shuffle is the final deterministic ORDER BY — the scan fanout's
+    // range exchange when it fires (q27 additionally aggregates, giving it
+    // one more exchange), and no join appears
+    Seq("q23_strings", "q26b_array_ops", "q34_simhash", "q35_quality",
+      "q36_token_count", "q37_fingerprint", "q38_langid",
+      "q39_rolling_fingerprint", "q42_redaction", "q43_repetition").foreach { q =>
       val p = plan(q)
       assert(!p.contains("Join"), s"$q grew a join:\n$p")
       val exchanges = "Exchange".r.findAllIn(p).size
@@ -638,4 +658,33 @@ class PlanShapeSpec extends SparkSpec {
     assert(kernels == 1, s"q95 shingle kernel evaluated $kernels times (want 1):\n$p")
     assert(p.contains("partial_count"), s"q95 lost map-side partials:\n$p")
   }
+}
+
+object PlanShapeSpec {
+  /** The catalog entries whose plans fan a narrow scan out before a per-row
+    * kernel (ScanFanoutRule) at sf0.001 on 4 cores. Against the r18
+    * call-site set: q02_docs_scan and q40_stratified_sample evaluate no
+    * kernel; q96_dedup_yield's shingle input is a cached window output that
+    * already runs at shuffle width; q54, q66, q78, q86, q103, q112, q120,
+    * q121 and q135 run the same marked text kernels on document scans that
+    * r18 never wrapped; q77, q80 and q132 run the nearest-centroid kernel
+    * over the same cached quantized embeddings q81 and q130 fanned.
+    */
+  val fanned: Set[String] = Set(
+    "q23_strings", "q26b_array_ops", "q31_jaccard_pairs", "q32_minhash_lsh",
+    "q34_simhash", "q35_quality", "q36_token_count", "q37_fingerprint",
+    "q38_langid", "q39_rolling_fingerprint", "q42_redaction",
+    "q43_repetition", "q44_decontaminate", "q51_bloom_decontaminate",
+    "q54_dup_spans", "q56_incremental_neardup", "q58_contamination_report",
+    "q63_containment", "q66_quality_sweep", "q67_source_overlap",
+    "q68_dup_clusters", "q69_heavy_hitters", "q73_span_ladder",
+    "q75_quarantine_clusters", "q76_cluster_reps", "q77_kmeans_refine",
+    "q78_novelty_deciles", "q79_dup_aware_sample", "q80_codebook_margin",
+    "q81_ivf_route", "q83_lsh_md5", "q84_label_prop", "q86_split_leakage",
+    "q89_minhash_estimate", "q95_boilerplate", "q103_split_parity",
+    "q106_neardup_sweep", "q112_quality_length_corr",
+    "q117_dup_quality_bias", "q120_shingle_df_histogram",
+    "q121_lang_agreement", "q128_lsh_fidelity", "q130_ann_recall",
+    "q131_neardup_degree", "q132_cell_balance", "q134_lsh_incremental",
+    "q135_weighted_sample")
 }
