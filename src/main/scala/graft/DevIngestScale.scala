@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 /** Dev-only: 1× vs N× scale smoke for the BINARY INGEST path (VERDICT r11
   * item 5) — the round-11 surface that DevScale's query sweep doesn't
   * touch: `SniffingExtractor` routing a mixed PDF/DOCX corpus through
-  * `Pipeline.process` (posexplode → ordered reassembly → S11 gate →
-  * reason-coded quarantine diagnosis).
+  * `Pipeline.process` (one narrow pass: indexed pages plus, for rows
+  * without text, the reason-coded diagnosis → one url-keyed reassembly →
+  * S11 gate).
   *
   * The corpus is SYNTHESIZED deterministically per doc id (no wall-clock,
   * no RNG — same bytes every run) and STAGED to parquet before timing, so
@@ -17,11 +18,12 @@ import org.apache.spark.sql.functions._
   *  - id % 4 == 2    → a 3-stream Flate PDF (the PipelineSpec shape);
   *  - id % 4 == 3    → alternating DCT-only PDFs and garbage bytes — the
   *    two quarantine classes, so the diagnosis re-parse (which only runs
-  *    on quarantined rows) is part of what's measured.
+  *    on rows without text) is part of what's measured.
   *
   * Expected shape: extraction is per-row mapPartitions work and the
-  * reassembly exchange is url-keyed with page-sized rows, so N× docs
-  * should cost ~N× wall on fixed cores (linear, embarrassingly parallel —
+  * reassembly exchange is url-keyed and carries page text and reason
+  * strings only, never the binaries, so N× docs should cost ~N× wall on
+  * fixed cores (linear, embarrassingly parallel —
   * the property a 1000-executor cluster relies on). A superlinear ratio
   * here would mean the pipeline holds per-partition state that grows with
   * the corpus.

@@ -37,7 +37,6 @@ import scala.util.matching.Regex
   */
 object FlatePdfExtractor extends PageExtractor {
 
-  private val ObjHeaderRe: Regex = """(\d+)\s+0\s+obj""".r
   private val TfRe: Regex = """/(\w+)\s+[\d.]+\s+Tf""".r
   private val TjRe: Regex = """\(((?:[^()\\]++|\\.)*+)\)\s*Tj""".r
   private val TJCloseRe: Regex = """\]\s*TJ""".r
@@ -78,6 +77,46 @@ object FlatePdfExtractor extends PageExtractor {
     out.toSeq
   }
 
+  /** PDF whitespace as the old `\s` class read it: space, \t, \n, \x0B,
+    * \f, \r — not \u0085 or NBSP.
+    */
+  private def isWs(c: Char): Boolean =
+    c == ' ' || (c >= '\t' && c <= '\r')
+
+  /** (objNum, headerStart, headerEnd) per `(\d+)\s+0\s+obj` header —
+    * exactly that regex's `findAllMatchIn` list, minus the numbers
+    * `toIntOption` rejects — without stepping a regex through every
+    * byte. Each `obj` is found with `indexOf` and its prefix is walked
+    * backwards: maximal whitespace, `0`, maximal whitespace, maximal
+    * digits. The forward regex can only match those same maximal runs,
+    * and a match's prefix holds no `o`, `b` or `j`, so the candidates
+    * neither overlap nor cross an earlier `obj`: the walk is linear and
+    * the list is the regex's, in order.
+    */
+  private[etl] def objHeaders(raw: String): Vector[(Int, Int, Int)] = {
+    val b = Vector.newBuilder[(Int, Int, Int)]
+    var k = raw.indexOf("obj")
+    while (k >= 0) {
+      var p = k
+      while (p > 0 && isWs(raw.charAt(p - 1))) p -= 1
+      if (p < k && p > 0 && raw.charAt(p - 1) == '0') {
+        val w1End = p - 1
+        p = w1End
+        while (p > 0 && isWs(raw.charAt(p - 1))) p -= 1
+        if (p < w1End) {
+          val numEnd = p
+          while (p > 0 && raw.charAt(p - 1) >= '0' &&
+                 raw.charAt(p - 1) <= '9') p -= 1
+          if (p < numEnd)
+            raw.substring(p, numEnd).toIntOption
+              .foreach(n => b += ((n, p, k + 3)))
+        }
+      }
+      k = raw.indexOf("obj", k + 3)
+    }
+    b.result()
+  }
+
   /** (objNum, dictText, streamDataStart | −1) per `N 0 obj` header, in
     * one linear pass (r12 — replaces the lazy-dot ObjRe/StreamRe pair,
     * which was O(headers × tail) on terminator-less crafted input AND
@@ -95,9 +134,7 @@ object FlatePdfExtractor extends PageExtractor {
     // not throw NumberFormatException and abort the WHOLE document's
     // extraction to Nil with a misleading 'empty-text' diagnosis (r13
     // advice; the DOCX HeaderNameRe \d{1,6} fix for the same class)
-    val hs = ObjHeaderRe.findAllMatchIn(raw)
-      .flatMap(m => m.group(1).toIntOption.map(n => (n, m.start, m.end)))
-      .toVector
+    val hs = objHeaders(raw)
     if (hs.isEmpty) return Nil
     // ALL terminator positions up front (one linear sweep each), so the
     // per-header resolution is a binary search: a per-header indexOf

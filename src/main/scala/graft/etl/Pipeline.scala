@@ -7,10 +7,11 @@ import graft.Tables
 
 /** The reference's batch ingestion pipeline (E1/E2, SURVEY §3) re-expressed
   * as composable DataFrame stages. Shape at scale: the per-document section
-  * (S9–S15) is one narrow projection chain — a single whole-stage-codegen
-  * span over however many executors hold the binary partitions; the only
-  * wide operations are the S5 incremental anti-join (shuffle on base_name)
-  * and any file-per-doc sink repartition.
+  * (S9, S11 reason) is one narrow projection over however many executors
+  * hold the binary partitions; the wide operations are the S10 url-keyed
+  * reassembly (page text and reason strings only — never the binaries),
+  * the S5 incremental anti-join (shuffle on base_name) and any
+  * file-per-doc sink repartition.
   *
   * Error containment (S16, fetch_legal_docs.py:93-96): extraction failures
   * become quarantine rows, never task failures — `process` returns both
@@ -75,108 +76,73 @@ object Pipeline {
   }
 
   /** S9–S14 over staged binaries: (url, content: BINARY) → document records
-    * + quarantine channel. `extractor` runs inside a deserializing map — the
-    * page *dataflow* (explode → order-preserving reassembly) is plain Spark.
+    * + quarantine channel, in one narrow pass and one url-keyed shuffle.
+    * `extractor` runs inside a deserializing map — the page *dataflow*
+    * (indexed pages → order-preserving reassembly) is plain Spark.
+    *
+    * Per binary row, one projection keeps the row's `(pos, txt)` pages
+    * and, only when those pages hold no text or the url is null, runs
+    * the codec's structural diagnosis on the bytes already at hand — the
+    * happy path pays nothing for it. Then one `groupBy(url)` carries
+    * only page text and reason strings: the binary column is never
+    * shuffled and nothing joins back onto the binaries. Both channels
+    * filter that one aggregate, so each row lands in exactly one of
+    * them; a url staged twice stays one row (its pages merged by
+    * `(pos, txt)`, its reason the minimum over its copies).
     *
     * @param keepEmptyPages mcp_server.py:27-28 keeps empty pages as "";
     *                       the CLI pipeline drops them (fetch_legal_docs.py:63).
     * @param ingestDate     injected run date (reference uses today();
     *                       injection keeps runs reproducible).
-    * @param broadcastQuarantine SCALE LEVER (the coShingledPairs
-    *                       broadcastCounts pattern): the quarantine
-    *                       diagnosis broadcasts the quarantined-url set
-    *                       by default — optimal while failures are the
-    *                       exception. Under SYSTEMIC failure (wrong
-    *                       codec wired, upstream format change: the
-    *                       quarantine set ≈ the whole corpus) the
-    *                       broadcast build would collect corpus-many
-    *                       urls to the driver and abort on the
-    *                       broadcast budget — pass `false` there to
-    *                       fall back to a shuffled join that degrades
-    *                       slowly instead (r12 review).
     */
   def process(binaries: DataFrame, extractor: PageExtractor,
               ingestDate: String, keepEmptyPages: Boolean = false,
-              category: Column = lit("CassationDecision"),
-              broadcastQuarantine: Boolean = true): Processed = {
-    val spark = binaries.sparkSession
+              category: Column = lit("CassationDecision")): Processed = {
     val extractUdf = udf((bytes: Array[Byte]) =>
       if (bytes == null) Seq.empty[String]
-      else try extractor.extractPages(bytes)
+      else try Option(extractor.extractPages(bytes)).getOrElse(Nil)
       catch { case _: Exception => Seq.empty[String] })
-
-    // S9: binary → pages with position (posexplode keeps page order explicit)
-    val pages = binaries
-      .select(col("url"), posexplode_outer(extractUdf(col("content")))
-        .as(Seq("pos", "page")))
-    val kept = if (keepEmptyPages) pages
-               else pages.filter(col("page").isNull || DocOps.nonEmptyPage(col("page")))
-
-    // S10: ordered reassembly — sort_array(collect_list(struct)) per §7.3.
-    // Left-join back to the URL set: a doc whose pages were ALL dropped
-    // (or whose extraction failed) must surface in quarantine, not vanish.
-    val reassembled = binaries.select("url").distinct()
-      .join(
-        kept.filter(col("page").isNotNull)
-          .groupBy("url")
-          .agg(DocOps.joinPages(
-            collect_list(struct(col("pos"), col("page").as("txt"))))
-            .as("content")),
-        Seq("url"), "left")
-      .withColumn("content", coalesce(col("content"), lit("")))
-
-    // S11 gate splits good docs from quarantine (S16): whitespace-only text
-    // means a failed/garbage parse — the reference logs and skips
-    // (fetch_legal_docs.py:66-68) and the consolidated variant deletes the
-    // bad PDF (import requests.py:84); here the row lands in `quarantine`
-    // for the caller's compensating action.
-    val good = reassembled
-      .filter(DocOps.nonEmptyDoc(col("content")))
-      .select(DocOps.docRecord(col("url"), col("content"), lit(ingestDate),
-          category)
-        .as("doc"))
-      .select("doc.*")
-    // Reason-coded quarantine (VERDICT r11 item 3): BROADCAST the
-    // (small by construction — it's the failure channel) quarantined-url
-    // set against the binaries as a semi-join, so the corpus-sized
-    // binary column is streamed map-side and never shuffled (r12 review:
-    // the previous urls-left join planned a sort-merge that exchanged
-    // every document's raw bytes on every consuming action, including
-    // each streaming micro-batch), and run the codec's structural
-    // diagnosis on just the surviving rows — the happy path pays
-    // nothing, and the diagnosis re-parses structure without re-decoding
-    // streams. Every quarantined url exists in `binaries` (the
-    // quarantine set derives from binaries' own url set), so the
-    // semi-join loses nothing vs the old left join. groupBy(min) keeps
-    // the one-row-per-url contract even if the same url was staged
-    // twice; only (url, reason) strings reach that exchange.
     val diagnoseUdf = udf((bytes: Array[Byte]) =>
       if (bytes == null) "no-content"
       else try extractor.diagnose(bytes)
       catch { case _: Exception => "empty-text" })
-    // the semi-join key is NULL-NORMALIZED on both sides (r12 review: a
-    // plain equi semi-join drops null-url rows — null never equals null
-    // — and a document would vanish from BOTH channels, violating the
-    // must-surface-in-quarantine invariant above). The key is a
-    // (isNull, value) STRUCT, not a string sentinel: no string can
-    // collide with the null encoding (review round 3 -- a sentinel url
-    // would semi-join-match a real document into the wrong channel),
-    // and the usingColumns join keeps Spark's ambiguous-self-join check
-    // happy where an explicit null-safe-equality condition over two
-    // lineage-shared frames would not.
-    val nullKey = (c: Column) =>
-      struct(c.isNull.as("n"), coalesce(c, lit("")).as("u"))
-    val quarantinedUrls = reassembled
-      .filter(!DocOps.nonEmptyDoc(col("content")))
-      .select(nullKey(col("url")).as("_k"))
-    val urlSide =
-      if (broadcastQuarantine) broadcast(quarantinedUrls)
-      else quarantinedUrls.hint("shuffle_hash")
-    val quarantine = binaries
-      .select(nullKey(col("url")).as("_k"), col("url"), col("content"))
-      .join(urlSide, Seq("_k"), "left_semi")
-      .select(col("url"), diagnoseUdf(col("content")).as("reason"))
-      .groupBy("url").agg(min(col("reason")).as("reason"))
+
+    // S9: binary → kept pages, each with its index in the codec's output
+    // so page order survives the shuffle (§7.3)
+    val keep = (txt: Column) =>
+      if (keepEmptyPages) txt.isNotNull else DocOps.nonEmptyPage(txt)
+    val pages = binaries.select(col("url"), col("content"),
+      filter(transform(extractUdf(col("content")),
+          (page, pos) => struct(pos.as("pos"), page.as("txt"))),
+        p => keep(p.getField("txt"))).as("pages"))
+
+    // S11 per row, S16 reason: diagnose only a row that cannot make a
+    // document on its own. `pages` is read twice below, so the optimizer
+    // keeps it a separate projection instead of inlining the extraction
+    // into the reason as well.
+    val hasText = exists(col("pages"), p => DocOps.nonEmptyPage(p.getField("txt")))
+    val rows = pages.select(col("url"), col("pages"),
+      when(col("url").isNull || !hasText, diagnoseUdf(col("content")))
+        .as("reason"))
+
+    // S10: ordered reassembly — the url's pages sorted by (pos, txt) and
+    // joined (DocOps.joinPages). S11 gate: whitespace-only text means a
+    // failed/garbage parse — the reference logs and skips
+    // (fetch_legal_docs.py:66-68) and the consolidated variant deletes the
+    // bad PDF (import requests.py:84); here the row lands in `quarantine`
+    // for the caller's compensating action, as does a null url, which no
+    // document record can carry.
+    val reassembled = rows.groupBy("url").agg(
+      DocOps.joinPages(flatten(collect_list(col("pages")))).as("content"),
+      min(col("reason")).as("reason"))
+    val isDoc = col("url").isNotNull && DocOps.nonEmptyDoc(col("content"))
+    val good = reassembled
+      .filter(isDoc)
+      .select(DocOps.docRecord(col("url"), col("content"), lit(ingestDate),
+          category)
+        .as("doc"))
+      .select("doc.*")
+    val quarantine = reassembled.filter(!isDoc).select("url", "reason")
     Processed(good, quarantine)
   }
 

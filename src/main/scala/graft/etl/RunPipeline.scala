@@ -44,10 +44,12 @@ object RunPipeline {
     Pipeline.writeDocs(out.docs, s"$outDir/documents")
     out.quarantine.write.mode("overwrite").json(s"$outDir/quarantine")
     val nDocs = Pipeline.readDocs(spark, s"$outDir/documents").count()
-    // count the DataFrame, not a schema-inferring re-read — an empty
-    // quarantine JSON dir has no inferable schema and would crash the CLI
-    // on the all-parsed success path
-    val nQuar = out.quarantine.count()
+    // count what was written, read back with a fixed schema: counting
+    // `out.quarantine` would extract the corpus a third time, and a
+    // schema-inferring read of an empty quarantine dir (the all-parsed
+    // success path) has no schema to infer and crashes
+    val nQuar = spark.read.schema("url STRING, reason STRING")
+      .json(s"$outDir/quarantine").count()
     println(s"""{"documents":$nDocs,"quarantined":$nQuar}""")
     spark.stop()
   }

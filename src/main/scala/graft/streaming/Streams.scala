@@ -336,9 +336,11 @@ object Streams {
       .select(col("path").as("url"), col("content"))
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // persist: Pipeline.process consumes the binaries twice (pages +
-        // url anchor) and we write two sinks — without this the PDF
-        // extraction would run ~4x per batch
+        // persist: the two channel sinks, the raster-loss pass and the
+        // compensating delete each read the batch — without this every one
+        // of them would re-read the staged files. Each channel action still
+        // runs its own extraction (Pipeline.process reads the batch once
+        // per action).
         batch.persist()
         try {
           val out = graft.etl.Pipeline.process(batch, extractor, ingestDate,

@@ -353,18 +353,8 @@ class PipelineSpec extends SparkSpec {
     val q = out.quarantine.collect().map(r =>
       (r.getAs[String]("url"), r.getAs[String]("reason")))
     assert(q.toSeq === Seq(("https://x/junk.bin", "not-pdf-or-docx")))
-    // plan shape (r12 review): the diagnosis attaches via a BROADCAST
-    // semi-join of the tiny quarantined-url set, so the corpus-sized
-    // binary content column is streamed map-side, never shuffled — the
-    // old urls-left join exchanged every document's raw bytes per
-    // consuming action, including every streaming micro-batch
-    val qPlan = out.quarantine.queryExecution.executedPlan.toString
-    val qSemi = qPlan.linesIterator.filter(_.contains("LeftSemi")).toSeq
-    assert(qSemi.nonEmpty && qSemi.forall(_.contains("BroadcastHashJoin")),
-      s"quarantine diagnosis must broadcast-semi-join, got:\n$qPlan")
-    // a NULL url must still surface in quarantine (null-normalized semi
-    // key, r12 review round 2: a plain equi semi-join made it vanish
-    // from both channels)
+    // a NULL url must still surface in quarantine, never vanish from
+    // both channels
     val withNull = Pipeline.process(
       Seq((null: String, "not a document".getBytes("UTF-8")))
         .toDF("url", "content"),
@@ -372,18 +362,6 @@ class PipelineSpec extends SparkSpec {
     val nq = withNull.quarantine.collect()
     assert(nq.length === 1 && nq.head.isNullAt(0) &&
       nq.head.getString(1) === "not-pdf-or-docx", nq.toSeq)
-    // the systemic-failure lever: broadcastQuarantine = false plans a
-    // shuffled semi-join (no driver-side collect of a corpus-sized set)
-    val shuffled = Pipeline.process(bins, SniffingExtractor(), "2026-08-15",
-      broadcastQuarantine = false)
-    // the reassembly subtree legitimately broadcasts (LeftOuter); only
-    // the SEMI join node itself must not
-    val sPlan = shuffled.quarantine.queryExecution.executedPlan.toString
-    val semiLines = sPlan.linesIterator.filter(_.contains("LeftSemi")).toSeq
-    assert(semiLines.nonEmpty && semiLines.forall(!_.contains("Broadcast")),
-      s"fallback semi-join must not broadcast, got:\n$sPlan")
-    assert(shuffled.quarantine.collect().map(_.getString(1)).toSeq ===
-      Seq("not-pdf-or-docx"))
     // a zip that is not an OPC word document gets its own reason class
     val zipNoDoc = {
       val bos = new java.io.ByteArrayOutputStream()
@@ -445,4 +423,137 @@ class PipelineSpec extends SparkSpec {
       SniffingExtractor().withPassword("በር"), "2026-08-16")
     assert(keyed.docs.head().getAs[String]("content") === "hidden")
   }
+
+  // ------------------------------------------- the narrow pass (S9–S16)
+
+  private def channels(out: Pipeline.Processed) = (
+    out.docs.select("sourceURL", "content").as[(String, String)]
+      .collect().sortBy(_._1).toSeq,
+    out.quarantine.as[(String, String)].collect().sortBy(_._1).toSeq)
+
+  test("narrow pass — a url staged twice stays one row, its pages merged by (pos, txt)") {
+    val out = Pipeline.process(binDf(
+      "https://x/twice.pdf" -> "a\fb",
+      "https://x/twice.pdf" -> "a\fc",
+      "https://x/half.pdf" -> "\f \f",
+      "https://x/half.pdf" -> "kept",
+      "https://x/none.pdf" -> " ",
+      "https://x/none.pdf" -> "\f"), FormFeedExtractor, "2026-08-12")
+    val (docs, quarantine) = channels(out)
+    assert(docs === Seq(
+      "https://x/half.pdf" -> "kept",
+      "https://x/twice.pdf" -> "a\na\nb\nc"))
+    assert(quarantine === Seq("https://x/none.pdf" -> "empty-text"))
+  }
+
+  test("narrow pass — a null url with extractable text lands in quarantine") {
+    val out = Pipeline.process(binDf(
+      (null: String) -> "plenty of text",
+      (null: String) -> "more text",
+      "https://x/ok.pdf" -> "text"), FormFeedExtractor, "2026-08-12")
+    val (docs, quarantine) = channels(out)
+    assert(docs === Seq("https://x/ok.pdf" -> "text"))
+    assert(quarantine === Seq((null: String) -> "empty-text"))
+  }
+
+  test("narrow pass — an extractor that throws or returns null quarantines with a reason") {
+    for (ex <- Seq(ThrowingExtractor, NullPagesExtractor, ThrowingDiagnoser)) {
+      val out = Pipeline.process(binDf("https://x/a.pdf" -> "text"), ex,
+        "2026-08-12")
+      val (docs, quarantine) = channels(out)
+      assert(docs.isEmpty, ex)
+      assert(quarantine === Seq("https://x/a.pdf" -> "empty-text"), ex)
+    }
+    // a null binary gets its own reason
+    val nullBytes = Pipeline.process(
+      Seq(("https://x/n.pdf", null: Array[Byte])).toDF("url", "content"),
+      FormFeedExtractor, "2026-08-12")
+    assert(channels(nullBytes)._2 === Seq("https://x/n.pdf" -> "no-content"))
+  }
+
+  test("narrow pass — keepEmptyPages keeps whitespace pages but still gates whitespace-only docs") {
+    val out = Pipeline.process(binDf(
+      "https://x/d.pdf" -> "a\f \f\fb",
+      "https://x/blank.pdf" -> "\f \f\t"), FormFeedExtractor, "2026-08-12",
+      keepEmptyPages = true)
+    val (docs, quarantine) = channels(out)
+    assert(docs === Seq("https://x/d.pdf" -> "a\n \n\nb"))
+    assert(quarantine === Seq("https://x/blank.pdf" -> "empty-text"))
+  }
+
+  test("narrow pass — one extraction per row per action; diagnosis only for rows without text") {
+    val dir = Files.createTempDirectory("graft_staged").resolve("bins").toString
+    binDf("https://x/a.pdf" -> "alpha", "https://x/b.pdf" -> "beta\fgamma",
+      "https://x/c.pdf" -> "\f ").write.parquet(dir)
+    val out = Pipeline.process(spark.read.parquet(dir), CountingExtractor,
+      "2026-08-12")
+    def counted[A](body: => A): (Int, Int) = {
+      CountingExtractor.extractions.set(0); CountingExtractor.diagnoses.set(0)
+      body
+      (CountingExtractor.extractions.get, CountingExtractor.diagnoses.get)
+    }
+    // the document channel never diagnoses; the quarantine channel
+    // diagnoses only c.pdf — the extraction is not inlined into the reason
+    assert(counted(out.docs.collect()) === ((3, 0)))
+    assert(counted(out.quarantine.collect()) === ((3, 1)))
+    assert(out.quarantine.as[(String, String)].collect().toSeq ===
+      Seq("https://x/c.pdf" -> "empty-text"))
+  }
+
+  test("narrow pass — neither channel joins, and no exchange carries the binaries") {
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.types.BinaryType
+    val dir = Files.createTempDirectory("graft_staged").resolve("bins").toString
+    binDf("https://x/a.pdf" -> "alpha", "https://x/c.pdf" -> " ")
+      .write.parquet(dir)
+    val out = Pipeline.process(spark.read.parquet(dir), SniffingExtractor(),
+      "2026-08-12")
+    for ((name, df) <- Seq("docs" -> out.docs, "quarantine" -> out.quarantine)) {
+      val nodes = graft.SpecHelpers.deepNodes(df.queryExecution.executedPlan)
+      val plan = df.queryExecution.executedPlan.treeString
+      assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]), s"$name joins:\n$plan")
+      // the scanned binary column, by attribute id: a partial
+      // collect_list buffer is BINARY too, but it holds page text
+      val binaries = nodes.collect { case s: FileSourceScanExec => s }
+        .flatMap(_.output).filter(_.dataType == BinaryType).map(_.exprId)
+      assert(binaries.nonEmpty, plan)
+      val exchanges = nodes.collect { case e: Exchange => e }
+      assert(exchanges.size === 1, s"$name:\n$plan")
+      assert(exchanges.forall(_.output.forall(a =>
+        a.name != "content" && !binaries.contains(a.exprId))),
+        s"$name shuffles the binaries:\n$plan")
+    }
+  }
+}
+
+/** Counts codec calls across the executor threads of the local session. */
+object CountingExtractor extends PageExtractor {
+  val extractions = new java.util.concurrent.atomic.AtomicInteger
+  val diagnoses = new java.util.concurrent.atomic.AtomicInteger
+  def extractPages(bytes: Array[Byte]): Seq[String] = {
+    extractions.incrementAndGet()
+    FormFeedExtractor.extractPages(bytes)
+  }
+  override def diagnose(bytes: Array[Byte]): String = {
+    diagnoses.incrementAndGet()
+    super.diagnose(bytes)
+  }
+}
+
+object ThrowingExtractor extends PageExtractor {
+  def extractPages(bytes: Array[Byte]): Seq[String] =
+    throw new IllegalStateException("codec bug")
+}
+
+object NullPagesExtractor extends PageExtractor {
+  def extractPages(bytes: Array[Byte]): Seq[String] = null
+}
+
+/** Extracts nothing and fails its diagnosis as well. */
+object ThrowingDiagnoser extends PageExtractor {
+  def extractPages(bytes: Array[Byte]): Seq[String] = Nil
+  override def diagnose(bytes: Array[Byte]): String =
+    throw new IllegalStateException("diagnosis bug")
 }
