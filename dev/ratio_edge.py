@@ -21,13 +21,11 @@ and leave the weak set on session noise with zero information content
 
 The SPARK side of the stabilized ratio is med.json itself — the
 cross-window per-query median, which for a 3-quiet-window session is
-already a 9-rep quiet median (win_median.py). A focused
-SPARK_GRAFT_BENCH_ONLY re-window is NOT used by default: measured
-r17, a 5-query window inflates the same rows' walls systematically
-(+40-95%; q61 247 ms stable across three full windows vs 365/484 in
-two focused runs back-to-back) — the small window's shape, not the
-query, dominates. Pass --spark5 bench_only.json only when no quiet
-cross-window median exists; its -1 sentinels are dropped.
+already a 9-rep quiet median (win_median.py). A focused re-window of
+just the edge rows is not a substitute: measured r17, a 5-query window
+inflates the same rows' walls systematically (+40-95%; q61 247 ms
+stable across three full windows vs 365/484 in two focused runs
+back-to-back) — the small window's shape, not the query, dominates.
 
 The band is +-10% of 2.0x; the bar rule (duck >= 100 ms) still gates
 membership, using the 5-run duck median once available.
@@ -72,12 +70,8 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("duck"); ap.add_argument("med")
     ap.add_argument("--verify-out"); ap.add_argument("--sf")
-    ap.add_argument("--duck5"); ap.add_argument("--spark5")
+    ap.add_argument("--duck5")
     a = ap.parse_args()
-    if a.spark5 and not a.duck5:
-        # fail loudly: silently printing the bare edge list here would
-        # let an operator believe the classification ran (r17 review)
-        ap.error("--spark5 requires --duck5 (run phase 1 first)")
     if bool(a.verify_out) != bool(a.sf):
         ap.error("--verify-out and --sf must be given together (phase 1)")
     duck = json.load(open(a.duck)); med = json.load(open(a.med))
@@ -90,26 +84,10 @@ def main():
     if a.duck5:
         duck5 = json.load(open(a.duck5))
         if "duck5" in duck5: duck5 = duck5["duck5"]  # phase-1 output file
-        # spark side: the cross-window median by default (see docstring);
-        # a --spark5 focused window only as the no-windows fallback
-        spark5 = {q: med[q] for q in edge}
-        if a.spark5:
-            raw = json.load(open(a.spark5))
-            # Bench's JSON line keys per-query MILLISECONDS under
-            # "queries_ms" on the qNN short prefix; normalize to the
-            # (full-name, seconds) space of duck/med, dropping Bench's
-            # -1 failed-measurement sentinel (a failed re-time keeps
-            # the first-pass median — the baseline.py rule)
-            if "queries_ms" in raw:
-                by_prefix = {q.split("_")[0]: ms / 1000.0
-                             for q, ms in raw["queries_ms"].items() if ms >= 0}
-                spark5 = {q: by_prefix.get(q.split("_")[0], med[q])
-                          for q in edge}
-            elif "queries" in raw:
-                spark5 = {q: v for q, v in raw["queries"].items() if v >= 0}
+        # spark side: the cross-window median (see docstring)
         verdicts = {}
         for q in edge:
-            d, s = duck5.get(q, duck[q]), spark5.get(q, med[q])
+            d, s = duck5.get(q, duck[q]), med[q]
             retime_failed = d < 0
             if retime_failed:
                 d = duck[q]  # failed 5-run re-time keeps the first pass

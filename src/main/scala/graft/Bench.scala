@@ -90,16 +90,7 @@ object Bench {
     // (r16) lets one ledger window run under local-cluster executors; NOT
     // the gate config, such windows are marked as cluster-mode in BASELINE.
     val spark = SparkBoot.session(cpus)
-    // SPARK_GRAFT_BENCH_ONLY (r17 — the ratio-edge protocol's Spark
-    // side): comma-separated query names restrict the window to a
-    // focused 5-rep re-time of the rows whose first-pass ratio landed
-    // within the 1.8–2.2× band (dev/ratio_edge.py). The warmup pass,
-    // sentinel and self-heal discipline all still apply to the subset.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    require(ordered.nonEmpty, "SPARK_GRAFT_BENCH_ONLY matched no queries")
     // the JSON line keys on the qNN name prefixes (see below) — guard
     // collisions BEFORE the multi-minute measurement passes, not at emit
     // time (a crash after the timed runs would lose the whole window)

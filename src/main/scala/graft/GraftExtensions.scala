@@ -55,15 +55,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "md5_prefix_all(arr, hexDigits) - md5 prefixes of a string array") { args =>
       Md5PrefixAll(args(0), intArg(args(1), "hexDigits"))
     }
-    register("md5_hex_all", "md5_hex_all(arr) - md5 hex of every element") {
-      args => Md5HexAll(args(0))
-    }
     register("shingles", "shingles(tokens, w) - w-token shingles") { args =>
       ShinglesExpr(args(0), intArg(args(1), "w"))
-    }
-    register("rolling_hashes",
-      "rolling_hashes(s, w) - Rabin-Karp hashes of every w-byte window") { args =>
-      RollingHashExpr(args(0), intArg(args(1), "w"))
     }
     register("shingle_md5_prefixes",
       "shingle_md5_prefixes(toks, w, hexDigits) - distinct md5 prefixes of w-token shingles") { args =>
@@ -80,14 +73,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     register("double_cents",
       "double_cents(x[, scale]) - exact minor units of a double at DECIMAL(18,scale)") { args =>
       DoubleCentsExpr(args(0), args.lift(1).map(intArg(_, "scale")).getOrElse(2))
-    }
-    register("md5_bottom_k",
-      "md5_bottom_k(arr, k) - k smallest distinct md5 hex digests, ascending") { args =>
-      Md5BottomKExpr(args(0), intArg(args(1), "k"))
-    }
-    register("rolling_bottom_k",
-      "rolling_bottom_k(s, w, k) - k smallest distinct rolling hashes, ascending") { args =>
-      RollingBottomKExpr(args(0), intArg(args(1), "w"), intArg(args(2), "k"))
     }
     register("redact",
       "redact(s) - STRUCT(redacted, n_emails, n_nums): one-pass email/digit-run PII scrub") {

@@ -55,10 +55,12 @@ object NativeExprs {
 
   /** The k nearest centroids by the same (d ASC, cid ASC) total order as
     * [[nearestCentroidL2]], as an ASCENDING array<struct<cid, d>> — the
-    * IVF ROUTING step (which nProbe cells a query fans out to), one
-    * bounded-insertion per-row loop instead of a K-way explode + per-query
-    * top-k aggregation. Fewer than k valid centroids yield a shorter
-    * array; null/dimension-mismatch rules are NearestCentroidL2's.
+    * IVF ROUTING step (which nProbe cells a query fans out to), and at
+    * k=2 the nearest distance plus the runner-up's (q80's assignment
+    * margin) — one bounded-insertion per-row loop instead of a K-way
+    * explode + per-query top-k aggregation. Fewer than k valid centroids
+    * yield a shorter array; null/dimension-mismatch rules are
+    * NearestCentroidL2's.
     */
   def nearestKCentroidsL2(v: Column, cents: Column, k: Int): Column =
     col(NearestKCentroidsL2(ex(v), ex(cents), k))
@@ -69,15 +71,6 @@ object NativeExprs {
     * HOF-form rewrites unconditionally safe).
     */
   def l2SqLong(a: Column, b: Column): Column = col(L2SqLong(ex(a), ex(b)))
-
-  /** Like [[nearestCentroidL2]] but also returns the SECOND-nearest
-    * distance (by the same (d, cid) total order): struct(cid, d, d2) —
-    * the per-row input to assignment-margin/separation diagnostics.
-    * Null when fewer than two valid centroids match the vector's
-    * dimension (a margin needs a runner-up).
-    */
-  def nearest2CentroidsL2(v: Column, cents: Column): Column =
-    col(Nearest2CentroidsL2(ex(v), ex(cents)))
 
   /** 32-bit md5 SimHash over a (distinct-ified by caller) token array —
     * value-identical to TextOps.simhash32 (one md5 per token instead of 8).
@@ -106,11 +99,6 @@ object NativeExprs {
     */
   def complexLit(value: Any, dt: DataType): Column =
     col(org.apache.spark.sql.catalyst.expressions.Literal.create(value, dt))
-
-  /** md5 hex digest of every element of ARRAY<STRING> in one pass —
-    * value-identical to transform(arr, x => md5(cast(x as binary))).
-    */
-  def md5HexAll(arr: Column): Column = col(Md5HexAll(ex(arr)))
 
   /** w-token shingles of a token array in one pass — value-identical to
     * TextOps.shinglesHof: transform(sequence(1, n-w+1),
@@ -153,9 +141,13 @@ object NativeExprs {
   def shingleMd5Prefixes(toks: Column, w: Int, hexDigits: Int): Column =
     col(ShingleMd5PrefixExpr(ex(toks), w, hexDigits))
 
-  /** Fused shingle+md5 bottom-k: value-identical to
-    * md5BottomK(shingles(toks, w), k) — the q37 fingerprint in one pass,
-    * no intermediate shingle strings.
+  /** Fused shingle+md5 bottom-k: the k smallest DISTINCT md5 hex digests
+    * of the w-token shingles, ascending — value-identical to
+    * slice(array_sort(array_distinct(transform(shingles(toks, w),
+    * s => md5(cast(s as binary))))), 1, k) — the q37 fingerprint in one
+    * pass, no intermediate shingle strings, a bounded insertion buffer
+    * over 16-byte digests (hex encoding is monotone in digest bytes, so
+    * unsigned digest order IS hex-string order) instead of a full sort.
     */
   def shingleMd5BottomK(toks: Column, w: Int, k: Int): Column =
     col(ShingleMd5BottomKExpr(ex(toks), w, k))
@@ -192,14 +184,6 @@ object NativeExprs {
       org.apache.spark.sql.catalyst.expressions.Literal(filterBytes, BinaryType),
       ex(value)))
 
-  /** Bottom-k DISTINCT md5 hex digests of a string array, ascending —
-    * value-identical to slice(array_sort(array_distinct(md5HexAll(arr))),
-    * 1, k), in one pass over 16-byte digests (hex encoding is monotone in
-    * digest bytes, so unsigned digest comparison IS hex-string order) with
-    * a bounded insertion buffer instead of sorting every boxed hex string.
-    */
-  def md5BottomK(arr: Column, k: Int): Column = col(Md5BottomKExpr(ex(arr), k))
-
   /** Occurrence count of tokens belonging to a fixed word set —
     * value-identical to size(filter(toks, t => t.isInCollection(words))).
     */
@@ -216,35 +200,15 @@ object NativeExprs {
   def langId(toks: Column, langs: Seq[(String, Seq[String])]): Column =
     col(LangIdExpr(ex(toks), langs))
 
-  /** Rabin-Karp rolling hashes over the UTF-8 bytes of a string: one
-    * 31-bit polynomial hash per window of `w` bytes, computed in O(n) with
-    * the rolling update (the "document fingerprinting (rolling hash)"
-    * north-star item). Bottom-k of the result is a content-defined
-    * fingerprint robust to insertions outside the window.
-    */
-  def rollingHashes(text: Column, w: Int): Column =
-    col(RollingHashExpr(ex(text), w))
-
-  /** Bottom-k DISTINCT rolling hashes, ascending — value-identical to
-    * slice(array_sort(array_distinct(rollingHashes(text, w))), 1, k) but
-    * one O(n·log k) pass with a bounded insertion buffer instead of
-    * materializing and sorting all n-w+1 boxed hashes per document (the
-    * right shape at corpus scale: output is k longs however long the doc).
-    */
-  def rollingBottomK(text: Column, w: Int, k: Int): Column =
-    col(RollingBottomKExpr(ex(text), w, k))
-
   /** Bottom-k DISTINCT 60-bit md5 prefixes of every `w`-CHARACTER window
     * of the text, ascending — the oracle-able window fingerprint (each
     * window hash is exactly
     * `('0x' || substr(md5(substr(text, i, w)), 1, 15))::UBIGINT` in
-    * DuckDB terms, so an engine-independent SQL twin exists, unlike the
-    * Rabin-Karp [[rollingBottomK]] whose polynomial recurrence is this
-    * library's own). Windows advance one character at a time; character
-    * boundaries are found in one byte pre-scan, so multibyte text hashes
-    * the same windows SQL `substr` selects. O(n·w) digest work per doc —
-    * the price of portability; [[rollingBottomK]] remains the O(n)
-    * rolling form when cross-engine replay is not needed.
+    * DuckDB terms, so any engine with md5 can replay it). Windows advance
+    * one character at a time; character boundaries are found in one byte
+    * pre-scan, so multibyte text hashes the same windows SQL `substr`
+    * selects. O(n·w) digest work per doc, but a bounded k-slot buffer:
+    * output is k longs however long the document.
     */
   def md5WindowBottomK(text: Column, w: Int, k: Int): Column =
     col(Md5WindowBottomKExpr(ex(text), w, k))
@@ -345,33 +309,22 @@ object NativeExprs {
   def tokenCounts(text: Column): Column = col(TokenCountsExpr(ex(text)))
 
   /** Prefix-doubling span-digest ladder: for every level k = 1..levels,
-    * one 64-bit digest per token span of length 2^k that fits in the
-    * document — `array<struct<span_len int, digest long>>`, all levels
-    * flattened. Level-1 digests are 60-bit md5 prefixes of the single
-    * tokens; level k+1 combines each span's two half-span digests with a
-    * murmur3-style non-commutative mix — so a length-64 span digests in
-    * log₂64 = 6 per-token operations instead of 64 (the suffix-array
-    * prefix-doubling step, here row-local because spans never cross
-    * document bounds). Equal spans ⇒ equal digests by construction;
-    * distinct spans collide with ~2⁻⁶⁰ probability per pair (the q31
-    * digest-tolerance class — an actual collision would surface as an
-    * oracle hash mismatch).
-    */
-  def spanDigestLadder(toks: Column, levels: Int): Column =
-    col(SpanLadderExpr(ex(toks), levels))
-
-  /** [[spanDigestLadder]] with the (level, digest) pair PACKED into one
-    * long — level (log₂ span_len, 3 bits) in bits 61..63 over the digest
-    * truncated to its low 61 bits — and the ladder emitted as a PRIMITIVE
-    * long array (`UnsafeArrayData.fromPrimitiveArray`, zero per-element
-    * boxing) from a codegen'd scan. Same mix arithmetic as the struct
-    * form; the 61-bit digest class keeps q31's collision tolerance
-    * (~2⁻⁶¹ per pair — an actual collision would surface as an oracle
-    * hash mismatch). Downstream recovers
-    * `span_len = 1 << shiftrightunsigned(pk, 61)`. Measured on q73: the
-    * struct ladder's boxed InternalRow-per-span ArrayBuffer plus the
-    * two-column group key were ~40 % of the query's wall — this form
-    * exists so the explode carries 8 opaque bytes per span end to end.
+    * one digest per token span of length 2^k that fits in the document,
+    * all levels flattened into a PRIMITIVE long array. Level-1 digests
+    * are 60-bit md5 prefixes of the single tokens; level k+1 combines
+    * each span's two half-span digests with a murmur3-style
+    * non-commutative mix — so a length-64 span digests in log₂64 = 6
+    * per-token operations instead of 64 (the suffix-array prefix-doubling
+    * step, here row-local because spans never cross document bounds).
+    * Each element PACKS the level (log₂ span_len, 3 bits) in bits 61..63
+    * over the digest truncated to its low 61 bits; downstream recovers
+    * `span_len = 1 << shiftrightunsigned(pk, 61)`. Equal spans ⇒ equal
+    * digests by construction; distinct spans collide with ~2⁻⁶¹
+    * probability per pair (the q31 digest-tolerance class — an actual
+    * collision would surface as an oracle hash mismatch). Measured on
+    * q73: a struct<span_len, digest> ladder's boxed InternalRow per span
+    * plus the two-column group key were ~40 % of the query's wall — so
+    * the explode carries 8 opaque bytes per span end to end.
     */
   def spanDigestLadderPacked(toks: Column, levels: Int): Column =
     col(SpanLadderPackedExpr(ex(toks), levels))
@@ -932,85 +885,9 @@ object CharClassRunCount {
   }
 }
 
-case class RollingHashExpr(child: Expression, w: Int)
-    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
-  require(w >= 1)
-  private val P = 2147483647L // 2^31 - 1
-  private val B = 257L
-  // B^(w-1) mod P for the rolling eviction
-  private val bPow: Long = {
-    var r = 1L; var i = 1
-    while (i < w) { r = r * B % P; i += 1 }
-    r
-  }
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "rolling_hashes"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
-    val n = bytes.length
-    if (n < w) return new GenericArrayData(Array.empty[Long])
-    val out = new Array[Long](n - w + 1)
-    var h = 0L
-    var i = 0
-    while (i < w) { h = (h * B + (bytes(i) & 0xffL)) % P; i += 1 }
-    out(0) = h
-    while (i < n) {
-      h = ((h - (bytes(i - w) & 0xffL) * bPow % P + P) % P * B +
-        (bytes(i) & 0xffL)) % P
-      out(i - w + 1) = h
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): RollingHashExpr =
-    copy(child = newChild)
-}
-
-case class RollingBottomKExpr(child: Expression, w: Int, k: Int)
-    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
-  require(w >= 1 && k >= 1)
-  private val P = 2147483647L // 2^31 - 1 (same family as RollingHashExpr)
-  private val B = 257L
-  private val bPow: Long = {
-    var r = 1L; var i = 1
-    while (i < w) { r = r * B % P; i += 1 }
-    r
-  }
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "rolling_bottom_k"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
-    val n = bytes.length
-    if (n < w) return new GenericArrayData(Array.empty[Long])
-    val bottom = new LongBottomK(k)
-    var h = 0L
-    var i = 0
-    while (i < w) { h = (h * B + (bytes(i) & 0xffL)) % P; i += 1 }
-    bottom.offer(h)
-    while (i < n) {
-      h = ((h - (bytes(i - w) & 0xffL) * bPow % P + P) % P * B +
-        (bytes(i) & 0xffL)) % P
-      bottom.offer(h)
-      i += 1
-    }
-    bottom.toArrayData()
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): RollingBottomKExpr =
-    copy(child = newChild)
-}
-
 /** Bounded distinct-bottom-k insertion buffer over LONGS, ascending — the
-  * primitive twin of [[DigestBottomK]], shared by the rolling-hash and
-  * md5-window fingerprint kernels (extracted in round 9; it had grown to
-  * two identical inline copies).
+  * primitive twin of [[DigestBottomK]], the md5-window fingerprint's
+  * k-slot buffer.
   */
 private[graft] final class LongBottomK(k: Int) {
   private val buf = new Array[Long](k)
@@ -1041,8 +918,8 @@ private[graft] final class LongBottomK(k: Int) {
   * `substr(text, i, w)` for every i) — boundaries come from one byte
   * pre-scan for non-continuation bytes; on ASCII text the index is the
   * identity. Each window digest feeds a reused MessageDigest; the 60-bit
-  * prefix (15 hex digits, always non-negative) goes through the same
-  * bounded distinct-bottom-k insertion buffer as [[RollingBottomKExpr]].
+  * prefix (15 hex digits, always non-negative) goes through a
+  * [[LongBottomK]] bounded distinct-bottom-k insertion buffer.
   */
 case class Md5WindowBottomKExpr(child: Expression, w: Int, k: Int)
     extends UnaryExpression with ExpectsInputTypes with CodegenFallback with RowKernel {
@@ -1644,6 +1521,20 @@ trait CachedCentroidCodebook {
     }
     q
   }
+
+  /** Exact integer squared L2 of two same-length vectors — the family's
+    * one distance loop.
+    */
+  protected final def sqL2(q: Array[Long], cv: Array[Long]): Long = {
+    var d = 0L
+    var j = 0
+    while (j < q.length) {
+      val diff = q(j) - cv(j)
+      d += diff * diff
+      j += 1
+    }
+    d
+  }
 }
 
 /** See [[NativeExprs.nearestCentroidL2]]. Argmin by (d ASC, cid ASC) over
@@ -1683,13 +1574,7 @@ case class NearestCentroidL2(left: Expression, right: Expression)
     while (k < m) {
       val cv = centVecs(k)
       if (cv != null && cv.length == n) {
-        var d = 0L
-        var j = 0
-        while (j < n) {
-          val diff = q(j) - cv(j)
-          d += diff * diff
-          j += 1
-        }
+        val d = sqL2(q, cv)
         val id = centIds(k)
         if (!found || d < bestD || (d == bestD && id < bestId)) {
           found = true; bestD = d; bestId = id
@@ -1707,79 +1592,11 @@ case class NearestCentroidL2(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** See [[NativeExprs.nearest2CentroidsL2]]. Two-minimum tracking under the
-  * (d ASC, cid ASC) total order — the winner is NearestCentroidL2's, and d2
-  * is the distance of the runner-up under the same order (a tie on d gives
-  * d2 = d). Same skip/null rules as NearestCentroidL2; additionally null
-  * when no second valid centroid exists.
-  */
-case class Nearest2CentroidsL2(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes with CodegenFallback
-    with CachedCentroidCodebook {
-  override def inputTypes: Seq[AbstractDataType] = Seq(
-    ArrayType(LongType),
-    ArrayType(StructType(Seq(
-      StructField("cid", IntegerType),
-      StructField("cv", ArrayType(LongType))))))
-  override def dataType: DataType = StructType(Seq(
-    StructField("cid", IntegerType),
-    StructField("d", LongType),
-    StructField("d2", LongType)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "nearest2_centroids_l2"
-
-  override def eval(input: InternalRow): Any = {
-    val e = left.eval(input)
-    if (e == null) return null
-    val cs = right.eval(input)
-    if (cs == null) return null
-    val q = primVec(e.asInstanceOf[ArrayData])
-    if (q == null) return null
-    val n = q.length
-    ensureCentroids(cs.asInstanceOf[ArrayData])
-    var nFound = 0
-    var bestD = 0L; var bestId = 0
-    var secD = 0L; var secId = 0
-    val m = centVecs.length
-    var k = 0
-    while (k < m) {
-      val cv = centVecs(k)
-      if (cv != null && cv.length == n) {
-        var d = 0L
-        var j = 0
-        while (j < n) {
-          val diff = q(j) - cv(j)
-          d += diff * diff
-          j += 1
-        }
-        val id = centIds(k)
-        if (nFound == 0) { bestD = d; bestId = id; nFound = 1 }
-        else if (d < bestD || (d == bestD && id < bestId)) {
-          secD = bestD; secId = bestId
-          bestD = d; bestId = id
-          if (nFound == 1) nFound = 2
-        } else if (nFound == 1 ||
-            d < secD || (d == secD && id < secId)) {
-          secD = d; secId = id
-          if (nFound == 1) nFound = 2
-        }
-      }
-      k += 1
-    }
-    if (nFound < 2) null
-    else new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](bestId, bestD, secD))
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Nearest2CentroidsL2 =
-    copy(left = newLeft, right = newRight)
-}
-
 /** See [[NativeExprs.nearestKCentroidsL2]]. Bounded k-slot insertion under
   * the (d, cid) total order — the generalization of [[NearestCentroidL2]]
-  * (k=1) and the margin kernel's two-minimum tracking; output ascending so
-  * result(0) IS NearestCentroidL2's winner. Same candidate skip/null rules.
+  * (k=1); output ascending so result(0) IS NearestCentroidL2's winner and,
+  * at k=2, result(1).d is the runner-up distance (q80's margin; a tie on d
+  * gives d2 = d). Same candidate skip/null rules.
   */
 case class NearestKCentroidsL2(left: Expression, right: Expression, k: Int)
     extends BinaryExpression with ExpectsInputTypes with CodegenFallback
@@ -1816,13 +1633,7 @@ case class NearestKCentroidsL2(left: Expression, right: Expression, k: Int)
     while (kk < m) {
       val cv = centVecs(kk)
       if (cv != null && cv.length == n) {
-        var d = 0L
-        var j = 0
-        while (j < n) {
-          val diff = q(j) - cv(j)
-          d += diff * diff
-          j += 1
-        }
+        val d = sqL2(q, cv)
         val id = centIds(kk)
         if (size < k || d < bd(size - 1) ||
             (d == bd(size - 1) && id < bc(size - 1))) {
@@ -1994,12 +1805,9 @@ private[graft] final class DigestBottomK(k: Int) {
     if (size < k) size += 1
   }
 
-  /** Hex-encoded contents, ascending; `trailingNull` appends one null slot
-    * (array_distinct-keeps-one-null parity) when there is room.
-    */
-  def toHexArray(trailingNull: Boolean = false): GenericArrayData = {
-    val extra = if (trailingNull && size < k) 1 else 0
-    val out = new Array[Any](size + extra)
+  /** Hex-encoded contents, ascending. */
+  def toHexArray(): GenericArrayData = {
+    val out = new Array[Any](size)
     var j = 0
     while (j < size) { out(j) = Md5.hex(buf(j)); j += 1 }
     new GenericArrayData(out)
@@ -2250,57 +2058,6 @@ case class MinHashSigExpr(child: Expression, k: Int, seed: Long)
     copy(child = newChild)
 }
 
-case class Md5BottomKExpr(child: Expression, k: Int)
-    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
-  require(k >= 1)
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(StringType)
-  override def prettyName: String = "md5_bottom_k"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val bottom = new DigestBottomK(k)
-    var sawNull = false
-    var i = 0
-    while (i < n) {
-      val t = arr.getUTF8String(i)
-      if (t == null) sawNull = true
-      else bottom.offer(Md5.digest(t.getBytes))
-      i += 1
-    }
-    // array_distinct keeps ONE null and array_sort places it LAST; it only
-    // survives the slice when fewer than k distinct non-null digests exist
-    bottom.toHexArray(trailingNull = sawNull)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Md5BottomKExpr =
-    copy(child = newChild)
-}
-
-case class Md5HexAll(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(StringType)
-  override def prettyName: String = "md5_hex_all"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val out = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      val t = arr.getUTF8String(i)
-      out(i) = if (t == null) null else Md5.hex(Md5.digest(t.getBytes))
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Md5HexAll =
-    copy(child = newChild)
-}
-
 case class Md5PrefixLong(child: Expression, hexDigits: Int)
     extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
   require(hexDigits >= 1 && hexDigits <= 15, "long holds at most 15 hex digits")
@@ -2316,103 +2073,15 @@ case class Md5PrefixLong(child: Expression, hexDigits: Int)
     copy(child = newChild)
 }
 
-/** See [[NativeExprs.tokenCounts]]. Split parity: Spark's split(text, ' ')
-  * is Java regex split with limit -1 — empty tokens between adjacent
-  * spaces AND at either end are all kept ("" splits to [""]), and 0x20
-  * never occurs inside a UTF-8 multibyte sequence, so a byte scan splits
-  * exactly like a char scan. Counting happens in a per-row LinkedHashMap
-  * (first-appearance order, deterministic for a given input).
-  */
-/** See [[NativeExprs.spanDigestLadder]]. Doubling invariant: entering
-  * round k, `d(i)` digests the length-2^(k-1) span at token offset i;
-  * the round emits `mix(d(i), d(i + 2^(k-1)))` for every i with the full
-  * 2^k span in bounds, which becomes the next round's `d`. Work is
-  * O(n · levels) mixes after one md5 per token — independent of the
-  * longest span length measured. A NULL token array yields an empty
-  * ladder (shinglesHof parity).
-  */
-case class SpanLadderExpr(child: Expression, levels: Int)
-    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
-  require(levels >= 1 && levels <= 20, "levels out of range")
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("span_len", IntegerType, nullable = false),
-      StructField("digest", LongType, nullable = false))),
-    containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "span_digest_ladder"
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) new GenericArrayData(Array.empty[Any])
-    else scan(v.asInstanceOf[ArrayData])
-  }
-
-  private def mix(a: Long, b: Long): Long = SpanMix.mix(a, b)
-
-  private def scan(arr: ArrayData): ArrayData = {
-    val n = arr.numElements()
-    var d = new Array[Long](n)
-    var i = 0
-    while (i < n) {
-      val bytes =
-        if (arr.isNullAt(i)) Array.emptyByteArray
-        else {
-          val u = arr.getUTF8String(i)
-          if (u == null) Array.emptyByteArray else u.getBytes
-        }
-      d(i) = Md5.prefixLong(Md5.digest(bytes), 15)
-      i += 1
-    }
-    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-    var k = 1
-    while (k <= levels && (1 << k) <= n) {
-      val len = 1 << k
-      val half = len >> 1
-      val m = n - len + 1
-      val nd = new Array[Long](m)
-      i = 0
-      while (i < m) {
-        val v = mix(d(i), d(i + half))
-        nd(i) = v
-        out += InternalRow(len, v)
-        i += 1
-      }
-      d = nd
-      k += 1
-    }
-    new GenericArrayData(out.toArray)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SpanLadderExpr =
-    copy(child = newChild)
-}
-
-/** The span-ladder combine shared by the struct and packed ladder kernels —
-  * non-commutative with a murmur3-fmix64 avalanche: the two halves enter
-  * under different odd multipliers, so mix(a,b) ≠ mix(b,a) and
-  * adjacent-level structure cannot cancel.
-  */
-object SpanMix {
-  def mix(a: Long, b: Long): Long = {
-    var h = a * 0x87c37b91114253d5L
-    h = java.lang.Long.rotateLeft(h, 31)
-    h ^= b * 0x4cf5ad432745937fL
-    h ^= h >>> 33
-    h *= 0xff51afd7ed558ccdL
-    h ^= h >>> 33
-    h *= 0xc4ceb9fe1a85ec53L
-    h ^= h >>> 33
-    h
-  }
-}
-
-/** See [[NativeExprs.spanDigestLadderPacked]]. Identical doubling invariant
-  * and mix arithmetic as [[SpanLadderExpr]]; differs only in the OUTPUT
-  * ENCODING — one primitive long per span, level tag in the top 3 bits —
-  * and in being codegen'd (the struct form is a CodegenFallback building a
-  * boxed InternalRow per span). A NULL token array yields an empty ladder.
+/** See [[NativeExprs.spanDigestLadderPacked]]. Doubling invariant:
+  * entering round k, `d(i)` digests the length-2^(k-1) span at token
+  * offset i; the round emits `mix(d(i), d(i + 2^(k-1)))` for every i with
+  * the full 2^k span in bounds, which becomes the next round's `d`. Work
+  * is O(n · levels) mixes after one md5 per token — independent of the
+  * longest span length measured. The mix is non-commutative with a
+  * murmur3-fmix64 avalanche: the two halves enter under different odd
+  * multipliers, so mix(a,b) ≠ mix(b,a) and adjacent-level structure cannot
+  * cancel. A NULL token array yields an empty ladder (shinglesHof parity).
   */
 case class SpanLadderPackedExpr(child: Expression, levels: Int)
     extends UnaryExpression with ExpectsInputTypes with RowKernel {
@@ -2472,7 +2141,7 @@ case class SpanLadderPackedExpr(child: Expression, levels: Int)
       val nd = new Array[Long](m)
       i = 0
       while (i < m) {
-        val v = SpanMix.mix(d(i), d(i + half))
+        val v = mix(d(i), d(i + half))
         nd(i) = v
         out(p) = tag | (v & Mask61)
         p += 1
@@ -2484,10 +2153,29 @@ case class SpanLadderPackedExpr(child: Expression, levels: Int)
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
+  private def mix(a: Long, b: Long): Long = {
+    var h = a * 0x87c37b91114253d5L
+    h = java.lang.Long.rotateLeft(h, 31)
+    h ^= b * 0x4cf5ad432745937fL
+    h ^= h >>> 33
+    h *= 0xff51afd7ed558ccdL
+    h ^= h >>> 33
+    h *= 0xc4ceb9fe1a85ec53L
+    h ^= h >>> 33
+    h
+  }
+
   override protected def withNewChildInternal(newChild: Expression): SpanLadderPackedExpr =
     copy(child = newChild)
 }
 
+/** See [[NativeExprs.tokenCounts]]. Split parity: Spark's split(text, ' ')
+  * is Java regex split with limit -1 — empty tokens between adjacent
+  * spaces AND at either end are all kept ("" splits to [""]), and 0x20
+  * never occurs inside a UTF-8 multibyte sequence, so a byte scan splits
+  * exactly like a char scan. Counting happens in a per-row LinkedHashMap
+  * (first-appearance order, deterministic for a given input).
+  */
 case class TokenCountsExpr(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)

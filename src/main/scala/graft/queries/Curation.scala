@@ -808,9 +808,11 @@ object Curation {
         |codebook for IVF routing (q29/q50) or SemDeDup pruning (q64); a
         |cluster whose margins hug 0 sits on a boundary and its members
         |churn under any perturbation. Same determinism-by-construction
-        |regime as q77 (no float anywhere); the two-minimum tracking is
-        |ONE compiled per-row loop (Nearest2CentroidsL2 — same (d, cid)
-        |total order as the oracle's rank-1/rank-2 rows), the trained
+        |regime as q77 (no float anywhere); the two nearest centroids
+        |come from ONE compiled per-row loop (NearestKCentroidsL2 at k=2 —
+        |same (d, cid) total order as the oracle's rank-1/rank-2 rows;
+        |a vector with fewer than two same-dimension centroids has no
+        |margin and lands in the null cluster), the trained
         |codebook is the identical 4-iteration refinement, and the mean
         |margin rounds half-up in INTEGER space ((2s+n) div 2n —
         |margins are non-negative). Scale shape: q77's broadcast-codebook
@@ -818,8 +820,12 @@ object Curation {
       kmeansMarginOracle) { (s, d) =>
       val emb = quantizedEmbeddings(s, d)
       emb
-        .select(NativeExprs.nearest2CentroidsL2(col("v"),
-          centsLit(refineCodebookArr(emb))).as("r"))
+        .select(NativeExprs.nearestKCentroidsL2(col("v"),
+          centsLit(refineCodebookArr(emb)), 2).as("nk"))
+        .select(when(size(col("nk")) === 2, struct(
+          get(col("nk"), lit(0)).getField("cid").as("cid"),
+          get(col("nk"), lit(0)).getField("d").as("d"),
+          get(col("nk"), lit(1)).getField("d").as("d2"))).as("r"))
         .select(col("r.cid").as("cid"), (col("r.d2") - col("r.d")).as("m"))
         .groupBy("cid")
         .agg(count(lit(1)).as("n_members"),

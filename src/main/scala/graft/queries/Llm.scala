@@ -570,13 +570,11 @@ object Llm {
         |`('0x' || substr(md5(substr(text,i,48)), 1, 15))::UBIGINT` per
         |window), making the fingerprint REPLAYABLE by any engine with
         |md5 — the property a cross-team dedup exchange format actually
-        |needs. The one-pass O(n) Rabin-Karp form
-        |(NativeExprs.rollingBottomK, recurrence spec-pinned) remains the
-        |cheap non-portable alternative. Scale shape: a single narrow
-        |map — the kernel keeps a bounded k-slot distinct-minima buffer
-        |per doc (never the n-w+1 window hashes), so output is 4 longs
-        |per document regardless of length; no shuffle but the final
-        |ORDER BY.""".stripMargin,
+        |needs. Scale shape: a single narrow map — the compiled
+        |Md5WindowBottomKExpr keeps a bounded k-slot distinct-minima
+        |buffer per doc (never the n-w+1 window hashes), so output is 4
+        |longs per document regardless of length; no shuffle but the
+        |final ORDER BY.""".stripMargin,
       """WITH w AS (
         |  SELECT doc_id, ('0x' || substr(md5(substr(text, i, 48)), 1, 15))::UBIGINT AS h
         |  FROM (SELECT doc_id, text, unnest(generate_series(1, len(text) - 47)) AS i

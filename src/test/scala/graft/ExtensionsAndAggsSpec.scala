@@ -18,7 +18,7 @@ class ExtensionsAndAggsSpec extends SparkSpec {
         |       md5_prefix_long('a', 7) AS p7,
         |       size(minhash_sig(array(1L, 2L, 3L), 8)) AS k,
         |       shingles(array('x','y','z'), 2) AS sg,
-        |       md5_hex_all(array('a')) AS hx
+        |       md5_prefix_all(array('a'), 7) AS pa
       """.stripMargin).head()
     assert(r.getAs[Double]("d") === 11.0)
     assert(r.getAs[Long]("sh") >= 0L)
@@ -26,7 +26,19 @@ class ExtensionsAndAggsSpec extends SparkSpec {
     assert(r.getAs[Long]("p7") === java.lang.Long.parseLong("0cc175b", 16))
     assert(r.getAs[Int]("k") === 8)
     assert(r.getAs[Seq[String]]("sg") === Seq("x y", "y z"))
-    assert(r.getAs[Seq[String]]("hx").head.startsWith("0cc175b9"))
+    assert(r.getAs[Seq[Long]]("pa") === Seq(java.lang.Long.parseLong("0cc175b", 16)))
+  }
+
+  test("GraftExtensions registers exactly the pinned SQL functions") {
+    // a function joins or leaves the SQL surface only by editing this list
+    val registered = spark.catalog.listFunctions().collect()
+      .filter(_.className == "graft").map(_.name).toSet
+    assert(registered === Set(
+      "dot_f32", "simhash32", "minhash_sig", "md5_prefix_long",
+      "md5_prefix_all", "shingles", "shingle_md5_prefixes",
+      "shingle_md5_bottom_k", "lsh_min_sig", "double_cents", "redact",
+      "year_extract", "lower_alnum_run_count", "json_int_field",
+      "shingle_stats", "distinct_sorted_prefix", "hrefs", "best_anchor"))
   }
 
   test("round-3 scanner kernels callable from SQL") {

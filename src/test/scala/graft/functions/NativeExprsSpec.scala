@@ -145,10 +145,10 @@ class NativeExprsSpec extends SparkSpec {
     }
   }
 
-  test("nearestCentroidL2 == HOF zip_with argmin on quantized embeddings") {
-    // the q77 kernel: identical exact-integer squared-L2, identical
-    // (d ASC, cid ASC) argmin — compare against the interpreted
-    // zip_with/aggregate + min(struct) composition it replaced
+  /** Quantized embeddings (vec_id, v) crossed with a 16-centroid
+    * codebook column `cents` of struct(cid, cv) — the q77 input shape.
+    */
+  private def quantizedWithCents() = {
     val emb = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"),
         transform(col("embedding"),
@@ -156,7 +156,26 @@ class NativeExprsSpec extends SparkSpec {
     val cents = emb.filter(col("vec_id") < 16)
       .select(col("vec_id").cast("int").as("cid"), col("v").as("cv"))
       .agg(sort_array(collect_list(struct(col("cid"), col("cv")))).as("cents"))
-    val both = emb.crossJoin(broadcast(cents))
+    emb.crossJoin(broadcast(cents))
+  }
+
+  /** The interpreted zip_with/aggregate squared-L2 of every centroid as
+    * struct(d, cid), sorted — the (d ASC, cid ASC) order the kernels keep.
+    */
+  private def sortedHofDistances(v: org.apache.spark.sql.Column,
+                                 cents: org.apache.spark.sql.Column) =
+    array_sort(transform(cents, c =>
+      struct(
+        aggregate(zip_with(v, c.getField("cv"),
+          (a, b) => (a - b) * (a - b)), lit(0L), (acc, x) => acc + x)
+          .as("d"),
+        c.getField("cid").as("cid"))))
+
+  test("nearestCentroidL2 == HOF zip_with argmin on quantized embeddings") {
+    // the q77 kernel: identical exact-integer squared-L2, identical
+    // (d ASC, cid ASC) argmin — compare against the interpreted
+    // zip_with/aggregate + min(struct) composition it replaced
+    val both = quantizedWithCents()
       .select(col("vec_id"),
         NativeExprs.nearestCentroidL2(col("v"), col("cents")).as("fast"),
         array_min(transform(col("cents"), c =>
@@ -191,53 +210,72 @@ class NativeExprsSpec extends SparkSpec {
     assert(rows(2).getStruct(1).getLong(1) === (64L + 49L + 36L))
   }
 
-  test("nearest2CentroidsL2 == sorted HOF distances on quantized embeddings") {
-    // winner identical to nearestCentroidL2; d/d2 = the first two elements
-    // of the (d, cid)-sorted distance structs
-    val emb = Tables.embeddings(spark, sf0001)
+  test("nearestKCentroidsL2(k=2) == sorted HOF on quantized embeddings") {
+    // q80's input: the nearest centroid and the runner-up, each
+    // struct(cid, d) — the first two elements of the (d, cid)-sorted
+    // interpreted distance structs
+    val both = quantizedWithCents()
       .select(col("vec_id"),
-        transform(col("embedding"),
-          e => round(e.cast("double") * lit(10000.0)).cast("long")).as("v"))
-    val cents = emb.filter(col("vec_id") < 16)
-      .select(col("vec_id").cast("int").as("cid"), col("v").as("cv"))
-      .agg(sort_array(collect_list(struct(col("cid"), col("cv")))).as("cents"))
-    val both = emb.crossJoin(broadcast(cents))
-      .select(col("vec_id"),
-        NativeExprs.nearest2CentroidsL2(col("v"), col("cents")).as("fast"),
-        array_sort(transform(col("cents"), c =>
-          struct(
-            aggregate(zip_with(col("v"), c.getField("cv"),
-              (a, b) => (a - b) * (a - b)), lit(0L), (acc, x) => acc + x)
-              .as("d"),
-            c.getField("cid").as("cid")))).as("srt"))
-      .select(col("vec_id"), col("fast"),
-        struct(element_at(col("srt"), 1).getField("cid").as("cid"),
-          element_at(col("srt"), 1).getField("d").as("d"),
-          element_at(col("srt"), 2).getField("d").as("d2")).as("hofn"))
-    assert(both.filter(col("fast") =!= col("hofn")).count() === 0)
-    assert(both.filter(col("fast").isNull).count() === 0)
+        NativeExprs.nearestKCentroidsL2(col("v"), col("cents"), 2).as("fast"),
+        transform(slice(sortedHofDistances(col("v"), col("cents")), 1, 2),
+          x => struct(x.getField("cid").as("cid"), x.getField("d").as("d")))
+          .as("hof"))
+    assert(both.filter(col("fast") =!= col("hof")).count() === 0)
+    assert(both.filter(size(col("fast")) =!= 2).count() === 0)
   }
 
-  test("nearest2CentroidsL2 — tie and too-few-centroids edges") {
+  test("nearestKCentroidsL2(k=2) — tie and too-few-centroids edges") {
     val cents = Seq((1, Seq(0L, 0L)), (2, Seq(0L, 0L)), (3, Seq(4L, 0L)))
     val one = Seq((9, Seq(0L, 0L, 0L)))
-    val rows = Seq((1L, Seq(1L, 1L)), (2L, Seq(1L, 1L, 1L)))
+    val rows = Seq((1L, Some(Seq(1L, 1L))), (2L, Some(Seq(1L, 1L, 1L))),
+        (3L, None))
       .toDF("id", "v")
       .withColumn("cents", typedlit(cents))
       .withColumn("one", typedlit(one))
       .select(col("id"),
-        NativeExprs.nearest2CentroidsL2(col("v"),
-          expr("transform(cents, c -> struct(c._1 as cid, c._2 as cv))")).as("r"),
-        NativeExprs.nearest2CentroidsL2(col("v"),
-          expr("transform(one, c -> struct(c._1 as cid, c._2 as cv))")).as("r1"))
+        NativeExprs.nearestKCentroidsL2(col("v"),
+          expr("transform(cents, c -> struct(c._1 as cid, c._2 as cv))"), 2).as("r"),
+        NativeExprs.nearestKCentroidsL2(col("v"),
+          expr("transform(one, c -> struct(c._1 as cid, c._2 as cv))"), 2).as("r1"))
       .orderBy("id").collect()
-    // cids 1/2 tie at d=2 → winner 1, d2 = the tied 2 (not centroid 3's 10)
-    assert(rows(0).getStruct(1).getInt(0) === 1)
-    assert(rows(0).getStruct(1).getLong(1) === 2L)
-    assert(rows(0).getStruct(1).getLong(2) === 2L)
-    assert(rows(0).isNullAt(2))  // 2-dim vector vs the single 3-dim centroid
-    assert(rows(1).isNullAt(1))  // 3-dim vector: no matching 2-dim centroid
-    assert(rows(1).isNullAt(2))  // one matching centroid is not enough for d2
+    def pairs(i: Int, c: Int) = rows(i).getSeq[org.apache.spark.sql.Row](c)
+      .map(r => (r.getInt(0), r.getLong(1)))
+    // cids 1/2 tie at d=2 → winner 1, runner-up the tied 2 (d2 = d, not
+    // centroid 3's 10)
+    assert(pairs(0, 1) === Seq((1, 2L), (2, 2L)))
+    // too few same-dimension centroids for a margin: a 2-dim vector vs the
+    // single 3-dim centroid, a 3-dim vector vs the 2-dim codebook, and one
+    // matching centroid — element 1 is absent, so q80's size guard yields
+    // a null margin
+    assert(pairs(0, 2).isEmpty)
+    assert(pairs(1, 1).isEmpty)
+    assert(pairs(1, 2) === Seq((9, 3L)))
+    assert(rows(2).isNullAt(1) && rows(2).isNullAt(2)) // null vector
+  }
+
+  test("nearestKCentroidsL2(k=1) element 0 == nearestCentroidL2") {
+    val both = quantizedWithCents()
+      .select(
+        NativeExprs.nearestKCentroidsL2(col("v"), col("cents"), 1).as("k1"),
+        NativeExprs.nearestCentroidL2(col("v"), col("cents")).as("n1"))
+    assert(both.filter(size(col("k1")) =!= 1).count() === 0)
+    assert(both.filter(element_at(col("k1"), 1) =!= col("n1")).count() === 0)
+  }
+
+  test("nearestKCentroidsL2 — k past the valid centroids: shorter array") {
+    // 16 valid centroids plus two of the wrong dimension (skipped): k=20
+    // returns all 16, in the sorted HOF (d, cid) order
+    val both = quantizedWithCents()
+      .withColumn("all", concat(col("cents"),
+        typedlit(Seq((90, Seq(1L, 2L, 3L)), (91, Seq(0L))))
+          .cast("array<struct<cid:int,cv:array<bigint>>>")))
+      .select(
+        NativeExprs.nearestKCentroidsL2(col("v"), col("all"), 20).as("fast"),
+        transform(sortedHofDistances(col("v"), col("cents")),
+          x => struct(x.getField("cid").as("cid"), x.getField("d").as("d")))
+          .as("hof"))
+    assert(both.filter(size(col("fast")) =!= 16).count() === 0)
+    assert(both.filter(col("fast") =!= col("hof")).count() === 0)
   }
 
   test("simhash32 native == HOF on corpus text") {
@@ -271,17 +309,14 @@ class NativeExprsSpec extends SparkSpec {
     assert(diff.count() === 0)
   }
 
-  test("md5PrefixAll == per-element md5PrefixLong, and md5HexAll == transform(md5)") {
+  test("md5PrefixAll == per-element md5PrefixLong") {
     val docs = Tables.documents(spark, sf0001).limit(100)
       .select(TextOps.shingles(TextOps.tokens(col("text")), 3).as("sh"))
       .filter(size(col("sh")) > 0)
     val diff = docs.select(
         NativeExprs.md5PrefixAll(col("sh"), 7).as("fastp"),
-        transform(col("sh"), s => NativeExprs.md5PrefixLong(s, 7)).as("hofp"),
-        NativeExprs.md5HexAll(col("sh")).as("fasth"),
-        transform(col("sh"), s => md5(s.cast(BinaryType))).as("hofh"))
-      .filter(to_json(col("fastp")) =!= to_json(col("hofp")) ||
-              to_json(col("fasth")) =!= to_json(col("hofh")))
+        transform(col("sh"), s => NativeExprs.md5PrefixLong(s, 7)).as("hofp"))
+      .filter(to_json(col("fastp")) =!= to_json(col("hofp")))
     assert(diff.count() === 0)
   }
 
@@ -297,45 +332,6 @@ class NativeExprsSpec extends SparkSpec {
           .cast(LongType).as("h15"))
       .filter(col("f7") =!= col("h7") || col("f15") =!= col("h15"))
     assert(diff.count() === 0)
-  }
-
-  test("rollingHashes — recurrence equals direct per-window recompute") {
-    val P = 2147483647L; val B = 257L; val w = 16
-    def direct(s: String): Seq[Long] = {
-      val bytes = s.getBytes("UTF-8")
-      if (bytes.length < w) Seq.empty
-      else (0 to bytes.length - w).map { i =>
-        bytes.slice(i, i + w).foldLeft(0L)((h, b) => (h * B + (b & 0xffL)) % P)
-      }
-    }
-    val texts = Tables.documents(spark, sf0001).limit(50)
-      .select(substring(col("text"), 1, 300).as("t"))
-    val got = texts.select(col("t"),
-        NativeExprs.rollingHashes(col("t"), w).as("h"))
-      .as[(String, Seq[Long])].collect()
-    got.foreach { case (t, hs) =>
-      assert(hs === direct(t), s"mismatch for '${t.take(40)}…'")
-    }
-    // short-input and SQL-surface behavior
-    assert(spark.sql(s"SELECT rolling_hashes('abc', $w)").head().getSeq[Long](0).isEmpty)
-  }
-
-  test("rollingBottomK == slice(array_sort(array_distinct(rollingHashes)))") {
-    val w = 48
-    val docs = Tables.documents(spark, sf0001).limit(200)
-    val diff = docs.select(
-        NativeExprs.rollingBottomK(col("text"), w, 4).as("fast"),
-        slice(array_sort(array_distinct(
-          NativeExprs.rollingHashes(col("text"), w))), 1, 4).as("ref"))
-      .filter(col("fast") =!= col("ref"))
-    assert(diff.count() === 0)
-    // fewer distinct hashes than k, and the sub-window empty case
-    val edge = Seq("aaaaaaaaaa", "ab").toDF("t")
-      .select(NativeExprs.rollingBottomK(col("t"), 3, 4).as("fast"),
-              slice(array_sort(array_distinct(
-                NativeExprs.rollingHashes(col("t"), 3))), 1, 4).as("ref"))
-      .filter(col("fast") =!= col("ref"))
-    assert(edge.count() === 0)
   }
 
   test("doubleCents == (cast to DECIMAL(18,s) * 10^s) cast long, incl. edges") {
@@ -382,6 +378,11 @@ class NativeExprsSpec extends SparkSpec {
   }
 
   test("fused shingle-md5 expressions == their composed forms") {
+    // bottom-k reference: the k smallest distinct md5 hexes of the shingle
+    // strings, sorted
+    def bottomKRef(sh: org.apache.spark.sql.Column, k: Int) =
+      slice(array_sort(array_distinct(
+        transform(sh, s => md5(s.cast(BinaryType))))), 1, k)
     val toks = split(col("text"), " ")
     val sh = NativeExprs.shingles(toks, 3)
     val diff = Tables.documents(spark, sf0001)
@@ -389,40 +390,23 @@ class NativeExprsSpec extends SparkSpec {
         NativeExprs.shingleMd5Prefixes(toks, 3, 15).as("fp"),
         array_distinct(NativeExprs.md5PrefixAll(sh, 15)).as("fp_ref"),
         NativeExprs.shingleMd5BottomK(toks, 3, 4).as("bk"),
-        NativeExprs.md5BottomK(sh, 4).as("bk_ref"))
+        bottomKRef(sh, 4).as("bk_ref"))
       .filter(col("fp") =!= col("fp_ref") || col("bk") =!= col("bk_ref"))
     assert(diff.count() === 0)
-    // null tokens are skipped with concat_ws semantics; short arrays empty
+    // null tokens are skipped with concat_ws semantics; short arrays empty;
+    // repeated shingles count once, and fewer than k distinct → shorter
     val edge = Seq(
       (Seq("a", null, "b", "c"): Seq[String]),
-      (Seq("x", "y"): Seq[String]))
+      (Seq("x", "y"): Seq[String]),
+      (Seq("a", "b", "a", "b", "a"): Seq[String]))
       .toDF("arr")
       .select(
         NativeExprs.shingleMd5Prefixes(col("arr"), 3, 15).as("fp"),
         array_distinct(NativeExprs.md5PrefixAll(
-          NativeExprs.shingles(col("arr"), 3), 15)).as("fp_ref"))
-      .filter(col("fp") =!= col("fp_ref"))
-    assert(edge.count() === 0)
-  }
-
-  test("md5BottomK == slice(array_sort(array_distinct(md5HexAll)))") {
-    val sh = NativeExprs.shingles(split(col("text"), " "), 3)
-    val diff = Tables.documents(spark, sf0001)
-      .select(NativeExprs.md5BottomK(sh, 4).as("fast"),
-              slice(array_sort(array_distinct(NativeExprs.md5HexAll(sh))),
-                    1, 4).as("ref"))
-      .filter(col("fast") =!= col("ref"))
-    assert(diff.count() === 0)
-    // duplicates, fewer-than-k, and null-element parity
-    val edge = Seq(
-      (Seq("a", "a", "b"): Seq[String]),
-      (Seq("x"): Seq[String]),
-      (Seq.empty[String]))
-      .toDF("arr")
-      .select(NativeExprs.md5BottomK(col("arr"), 4).as("fast"),
-              slice(array_sort(array_distinct(NativeExprs.md5HexAll(col("arr")))),
-                    1, 4).as("ref"))
-      .filter(col("fast") =!= col("ref"))
+          NativeExprs.shingles(col("arr"), 3), 15)).as("fp_ref"),
+        NativeExprs.shingleMd5BottomK(col("arr"), 3, 4).as("bk"),
+        bottomKRef(NativeExprs.shingles(col("arr"), 3), 4).as("bk_ref"))
+      .filter(col("fp") =!= col("fp_ref") || col("bk") =!= col("bk_ref"))
     assert(edge.count() === 0)
   }
 
@@ -840,15 +824,26 @@ class NativeExprsSpec extends SparkSpec {
   }
 
   test("spanDigestLadder — grouping parity vs string n-grams; injectivity") {
-    // the ladder's (span_len, digest) partition of positions must equal
-    // the string n-gram partition at every level: same group COUNT
-    // multisets (digest injectivity on this data) and same totals
+    // the ladder's packed (span_len, digest) partition of positions must
+    // equal the string n-gram partition at every level: same group COUNT
+    // multisets (digest injectivity on this data) and same totals —
+    // over the corpus plus the split-parity edge shapes (empty, short and
+    // repeated docs)
+    import spark.implicits._
     val corpus = Tables.documents(spark, sf0001)
-    val ladder = corpus
+      .select(col("doc_id"), col("text"))
+      .unionAll(Seq((9001L, ""), (9002L, "a"), (9003L, "a b"),
+        (9004L, "a b a b a b a b"), (9005L, ("t " * 70).trim))
+        .toDF("doc_id", "text"))
+    def spans(docs: org.apache.spark.sql.DataFrame, levels: Int) = docs
       .select(explode(NativeExprs
-        .spanDigestLadder(split(col("text"), " "), 6)).as("sd"))
-      .select(col("sd.span_len").as("len"), col("sd.digest").as("g"))
-      .groupBy("len", "g").agg(count(lit(1)).as("c"))
+        .spanDigestLadderPacked(split(col("text"), " "), levels)).as("pk"))
+      .select(
+        expr("cast(shiftleft(1, cast(shiftrightunsigned(pk, 61) as int)) as int)")
+          .as("len"),
+        col("pk"))
+    val ladder = spans(corpus, 6)
+      .groupBy("len", "pk").agg(count(lit(1)).as("c"))
       .collect()
       .groupBy(_.getAs[Int]("len"))
       .view.mapValues(_.map(_.getAs[Long]("c")).sorted.toSeq).toMap
@@ -868,50 +863,78 @@ class NativeExprsSpec extends SparkSpec {
     }
     // doc-boundary rule: a 3-token doc contributes 2+0+... spans at
     // lengths 2/4; equal spans in different docs share a digest
-    import spark.implicits._
     val tiny = Seq((1L, "a b c"), (2L, "a b"), (3L, "x a b c y z q r"))
       .toDF("doc_id", "text")
-    val rows = tiny
-      .select(explode(NativeExprs
-        .spanDigestLadder(split(col("text"), " "), 3)).as("sd"))
-      .select(col("sd.span_len"), col("sd.digest"))
-      .collect().map(r => (r.getInt(0), r.getLong(1)))
+    val rows = spans(tiny, 3).collect().map(r => (r.getInt(0), r.getLong(1)))
     assert(rows.count(_._1 == 2) === 2 + 1 + 7)
     assert(rows.count(_._1 == 4) === 0 + 0 + 5)
     assert(rows.count(_._1 == 8) === 0 + 0 + 1)
     // "a b" digests identically in docs 1, 2 and 3 (position-independent)
     val ab = rows.filter(_._1 == 2).map(_._2)
     assert(ab.distinct.length < ab.length)
+    // null text: empty ladder, explode drops the row
+    val nulls = Seq((1L, Option.empty[String])).toDF("doc_id", "text")
+    assert(spans(nulls, 6).count() === 0)
   }
 
   test("spanDigestLadderPacked — element-for-element parity with the struct ladder") {
-    import spark.implicits._
+    // reference: the struct<span_len, digest> ladder restated in plain
+    // Scala — split(text, ' ') tokens, level-1 digest = first 15 hex digits
+    // of md5(token), level k+1 = mix(d(i), d(i + half)) — so the packed
+    // kernel is checked POSITIONALLY: same ladder, same emission order,
+    // same digests modulo the declared 61-bit truncation
+    def md5Prefix60(t: String): Long = {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      val hex = md.digest(t.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+      java.lang.Long.parseLong(hex.substring(0, 15), 16)
+    }
+    def mix(a: Long, b: Long): Long = {
+      var h = a * 0x87c37b91114253d5L
+      h = java.lang.Long.rotateLeft(h, 31)
+      h ^= b * 0x4cf5ad432745937fL
+      h ^= h >>> 33
+      h *= 0xff51afd7ed558ccdL
+      h ^= h >>> 33
+      h *= 0xc4ceb9fe1a85ec53L
+      h ^= h >>> 33
+      h
+    }
+    def structLadder(text: String, levels: Int): Seq[(Int, Long)] =
+      if (text == null) Seq.empty
+      else {
+        val toks = text.split(" ", -1)
+        var d = toks.map(md5Prefix60)
+        val out = Seq.newBuilder[(Int, Long)]
+        var k = 1
+        while (k <= levels && (1 << k) <= toks.length) {
+          val len = 1 << k
+          d = Array.tabulate(toks.length - len + 1)(i => mix(d(i), d(i + len / 2)))
+          d.foreach(v => out += ((len, v)))
+          k += 1
+        }
+        out.result()
+      }
     val mask61 = (1L << 61) - 1
-    // corpus + the split-parity edge shapes (empty/short/repeated docs);
-    // null text behaves like the struct form: empty ladder, explode drops
+    // corpus + the split-parity edge shapes (empty/short/repeated docs)
+    // + null text (empty ladder)
     val corpus = Tables.documents(spark, sf0001)
       .select(col("doc_id"), col("text"))
-      .unionAll(Seq((9001L, ""), (9002L, "a"), (9003L, "a b"),
-        (9004L, "a b a b a b a b"), (9005L, ("t " * 70).trim))
+      .unionAll(Seq((9001L, Option("")), (9002L, Option("a")), (9003L, Option("a b")),
+        (9004L, Option("a b a b a b a b")), (9005L, Option(("t " * 70).trim)),
+        (9006L, Option.empty[String]))
         .toDF("doc_id", "text"))
-    val packed = corpus
-      .select(col("doc_id"), posexplode(NativeExprs
-        .spanDigestLadderPacked(split(col("text"), " "), 6)).as(Seq("p", "pk")))
-      .select(col("doc_id"), col("p"),
-        expr("cast(shiftleft(1, cast(shiftrightunsigned(pk, 61) as int)) as int)")
-          .as("span_len"),
-        expr(s"pk & ${mask61}L").as("d61"))
-    val struct = corpus
-      .select(col("doc_id"), posexplode(NativeExprs
-        .spanDigestLadder(split(col("text"), " "), 6)).as(Seq("p", "sd")))
-      .select(col("doc_id"), col("p"), col("sd.span_len").as("span_len"),
-        expr(s"(sd.digest) & ${mask61}L").as("d61"))
-    // POSITIONAL equality: same ladder, same emission order, same digests
-    // modulo the declared 61-bit truncation
-    assert(packed.exceptAll(struct).isEmpty && struct.exceptAll(packed).isEmpty)
-    val nulls = Seq((1L, Option.empty[String])).toDF("doc_id", "text")
-    assert(nulls.select(explode(NativeExprs
-      .spanDigestLadderPacked(split(col("text"), " "), 6))).count() === 0)
+    val got = corpus
+      .select(col("doc_id"), col("text"), NativeExprs
+        .spanDigestLadderPacked(split(col("text"), " "), 6).as("pk"))
+      .collect()
+    assert(got.length > 6)
+    got.foreach { r =>
+      val packed = r.getSeq[Long](2).map { pk =>
+        (1 << (pk >>> 61).toInt, pk & mask61)
+      }
+      val ref = structLadder(r.getString(1), 6).map { case (l, d) => (l, d & mask61) }
+      assert(packed === ref, s"doc ${r.getLong(0)} ladder differs")
+    }
   }
 
   test("md5WindowBottomK — equals composed substring/md5/distinct/sort/slice; char windows") {
