@@ -42,6 +42,7 @@ object FlatePdfExtractor extends PageExtractor {
   private val TJCloseRe: Regex = """\]\s*TJ""".r
   private val HexRe: Regex = """<([0-9A-Fa-f]+)>""".r
   private val LitRe: Regex = """\(((?:[^()\\]++|\\.)*+)\)""".r
+  private val WhitespaceRe = java.util.regex.Pattern.compile("\\s+")
   private val HexPairRe: Regex = """<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>""".r
   private val RangeTripleRe: Regex =
     """<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>""".r
@@ -847,12 +848,24 @@ object FlatePdfExtractor extends PageExtractor {
     pages.map(decodePage(_, nameToCmap)).filter(_.nonEmpty)
   }
 
+  /** The 16-bit value of the 4 hex digits at `hex(i)`..`hex(i + 3)` —
+    * `Integer.parseInt(hex.substring(i, i + 4), 16)` without the
+    * substring. Callers pass only hex-only regex groups, so every digit
+    * is valid.
+    */
+  private[etl] def hex4(hex: String, i: Int): Int = {
+    var v = 0
+    var k = i
+    while (k < i + 4) { v = v << 4 | Character.digit(hex.charAt(k), 16); k += 1 }
+    v
+  }
+
   private def hexToUnicode(hex: String): String = {
     // UTF-16BE code units, 4 hex digits each
     val sb = new StringBuilder
     var i = 0
     while (i + 4 <= hex.length) {
-      sb.append(Integer.parseInt(hex.substring(i, i + 4), 16).toChar)
+      sb.append(hex4(hex, i).toChar)
       i += 4
     }
     sb.toString
@@ -899,8 +912,7 @@ object FlatePdfExtractor extends PageExtractor {
     def emitHex(hex: String): Unit = {
       var i = 0
       while (i + 4 <= hex.length) {
-        val cid = Integer.parseInt(hex.substring(i, i + 4), 16)
-        sb.append(cmap.getOrElse(cid, ""))
+        sb.append(cmap.getOrElse(hex4(hex, i), ""))
         i += 4
       }
     }
@@ -920,7 +932,7 @@ object FlatePdfExtractor extends PageExtractor {
         }
       case _ => ()
     }
-    sb.toString.replaceAll("\\s+", " ").trim
+    WhitespaceRe.matcher(sb).replaceAll(" ").trim
   }
 }
 

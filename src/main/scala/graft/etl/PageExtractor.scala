@@ -62,53 +62,6 @@ object PageExtractor {
       bytes(0) == '%' && bytes(1) == 'P' && bytes(2) == 'D' && bytes(3) == 'F'
 }
 
-/** Best-effort raw-PDF stream decoder for the uncompressed-text case:
-  * pulls `(...) Tj` / `[...] TJ` show-text operators out of uncompressed
-  * content streams, one page per `/Type /Page` object encountered. Handles
-  * only the trivial subset of PDF (no FlateDecode, no font re-encoding) —
-  * enough for fixture PDFs; real corpora plug in a real codec.
-  */
-object RawPdfExtractor extends PageExtractor {
-  private val TextOp = """\(((?:[^()\\]|\\.)*)\)\s*Tj""".r
-
-  def extractPages(bytes: Array[Byte]): Seq[String] = {
-    val s = new String(bytes, StandardCharsets.ISO_8859_1)
-    if (!s.startsWith("%PDF")) return Nil
-    // naive page split: each "stream...endstream" block = one content
-    // stream. Linear marker walk, not the old lazy-dot regex — a crafted
-    // endstream-less upload made the regex rescan the tail per opening
-    // (the r12 CPU-bomb hardening; FlatePdfExtractor.lazySegments has
-    // the rationale).
-    val streams = {
-      val out = Seq.newBuilder[String]
-      var p = s.indexOf("stream")
-      while (p >= 0) {
-        val a = p + 6
-        val dataStart =
-          if (a < s.length && s.charAt(a) == '\n') a + 1
-          else if (a + 1 < s.length && s.charAt(a) == '\r' &&
-                   s.charAt(a + 1) == '\n') a + 2
-          else -1
-        if (dataStart < 0) p = s.indexOf("stream", p + 1)
-        else {
-          val e = s.indexOf("endstream", dataStart)
-          if (e < 0) p = -1
-          else { out += s.substring(dataStart, e)
-                 p = s.indexOf("stream", e + 9) }
-        }
-      }
-      out.result()
-    }
-    streams.flatMap { body =>
-      val texts = TextOp.findAllMatchIn(body).map(m => unescape(m.group(1))).toSeq
-      if (texts.isEmpty) None else Some(texts.mkString(" "))
-    }
-  }
-
-  private def unescape(t: String): String =
-    t.replace("\\(", "(").replace("\\)", ")").replace("\\\\", "\\")
-}
-
 /** Content-sniffing extractor for MIXED corpora (r11): the reference's
   * auto-ingest sweep posts PDFs and DOCX files in ONE pass
   * (auto_ingest.yml:24-32), so the batch path routes per ROW by magic

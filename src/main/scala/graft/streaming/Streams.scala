@@ -336,11 +336,11 @@ object Streams {
       .select(col("path").as("url"), col("content"))
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // persist: the two channel sinks, the raster-loss pass and the
-        // compensating delete each read the batch — without this every one
-        // of them would re-read the staged files. Each channel action still
-        // runs its own extraction (Pipeline.process reads the batch once
-        // per action).
+        // persist: the two channel sinks and the raster-loss pass each read
+        // the batch — without this every one of them would re-read the
+        // staged files. Each channel sink still runs its own extraction
+        // (Pipeline.process reads the batch once per action), so a batch
+        // is extracted twice.
         batch.persist()
         try {
           val out = graft.etl.Pipeline.process(batch, extractor, ingestDate,
@@ -393,10 +393,14 @@ object Streams {
               .json(s"$outDir/raster_loss/$batchId")
           } finally loss.unpersist()
           // compensating action AFTER the quarantine record is durable —
-          // the audit row survives even if the delete pass is replayed
+          // the audit row survives even if the delete pass is replayed. It
+          // deletes what that record holds, read back with a fixed schema:
+          // re-evaluating `out.quarantine` would extract the batch a third
+          // time, and an empty quarantine has no schema to infer.
           if (deleteQuarantined)
             graft.etl.Pipeline.compensatingDelete(
-              out.quarantine.withColumn("path", col("url")), "path")
+              batch.sparkSession.read.schema("url STRING, reason STRING")
+                .json(s"$outDir/quarantine/$batchId"), "url")
         } finally batch.unpersist()
       }
       .option("checkpointLocation", checkpoint)

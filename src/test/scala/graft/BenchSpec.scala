@@ -2,110 +2,51 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins for the bench harness's self-heal decision rules (pure seams of
-  * the `Bench` main — the outlier retry trigger and the r12
-  * end-of-window re-probe adoption rule). The live paths only fire on a
-  * contended host, so they need unit coverage: a wrong sign here
-  * silently corrupts the per-round BENCH record.
+/** Pins the bench's one stdout line (`Bench.jsonLine`, the pure seam of the
+  * `Bench` main): its key order and fields, failure marking, and the
+  * head-preserving budget guard. A wrong field here silently corrupts every
+  * BENCH record read from it.
   */
 class BenchSpec extends AnyFunSuite {
 
-  test("bimodalHigh: fires only past the floor band AND past 2x the vector min") {
-    // the r10 q119 signature: one transient hit dominating the median
-    assert(Bench.bimodalHigh(Seq(0.56, 7.45, 7.50)))
-    // below the 0.3 s floor band, 2x is launch jitter — never fire
-    assert(!Bench.bimodalHigh(Seq(0.05, 0.12, 0.13)))
-    // steady vector — never fire
-    assert(!Bench.bimodalHigh(Seq(1.0, 1.1, 1.2)))
-    // exactly 2x is NOT bimodal (strict >)
-    assert(!Bench.bimodalHigh(Seq(0.5, 1.0, 1.0)))
-    // 5-element post-retry vector, still dominated
-    assert(Bench.bimodalHigh(Seq(0.5, 4.9, 5.0, 5.1, 5.2)))
-    assert(!Bench.bimodalHigh(Nil))
+  test("jsonLine — key order, qNN keys, integer ms and the totals object") {
+    val line = Bench.jsonLine(
+      results = Seq("q01_alpha" -> 0.25, "q02b_beta" -> 1.5),
+      cold = Seq("q01_alpha" -> 2.0, "q02b_beta" -> 3.0),
+      cpuMs = Seq("q01_alpha" -> 400.0, "q02b_beta" -> 1100.0),
+      sf = "sf0.01")
+    assert(line ===
+      """{"metric":"total","value":1.75,"unit":"sec","failed":[],""" +
+      """"queries_ms":{"q01":250,"q02b":1500},"reps":3,"sf":"sf0.01",""" +
+      """"totals":{"warm_median":1.75,"cold_single_shot":5.0,"n_failed":0,""" +
+      """"floor":1.5,"cpu_s":1.5}}""")
   }
 
-  test("agreeSlow: fires on warm median far above the window's own cold single-shot, floor-banded") {
-    // the r12 driver-window q25 shape: 16.264 s warm median with ALL
-    // reps inside one contention episode (bimodal never fires — the
-    // reps agree), vs a ~0.35 s cold single-shot from the same window
-    assert(Bench.agreeSlow(16.264, 0.35))
-    // steady state: warm at or under cold — never fire
-    assert(!Bench.agreeSlow(0.9, 1.2))
-    // exactly 2x cold is NOT agree-slow (strict >, the bimodal rule)
-    assert(!Bench.agreeSlow(0.8, 0.4))
-    // below the 0.3 s floor band, any ratio is launch jitter
-    assert(!Bench.agreeSlow(0.25, 0.05))
-    // a failed cold reading (-1) can't vouch either way
-    assert(!Bench.agreeSlow(5.0, -1.0))
+  test("jsonLine — a failed query reads -1, is named in failed, and leaves every total") {
+    val line = Bench.jsonLine(
+      results = Seq("q01_ok" -> 0.5, "q02_boom" -> -1.0, "q03_cold_boom" -> 0.75),
+      cold = Seq("q01_ok" -> 1.0, "q02_boom" -> -1.0, "q03_cold_boom" -> -1.0),
+      cpuMs = Seq("q01_ok" -> 200.0, "q02_boom" -> -1.0, "q03_cold_boom" -> 300.0),
+      sf = "sf0.01")
+    assert(line.startsWith(
+      """{"metric":"total","value":1.25,"unit":"sec",""" +
+      """"failed":["q02_boom","q03_cold_boom"],"""), line)
+    assert(line.contains(""""queries_ms":{"q01":500,"q02":-1,"q03":750}"""), line)
+    assert(line.endsWith(
+      """"totals":{"warm_median":1.25,"cold_single_shot":1.0,"n_failed":2,""" +
+      """"floor":0.75,"cpu_s":0.5}}"""), line)
   }
 
-  test("reprobeCandidates: unhealed bimodal names plus all agree-slow extras, catalog order") {
-    val cold = Map("q10" -> 0.31, "q25" -> 0.35, "q26b" -> 0.33,
-      "q31" -> 1.0, "q55" -> 1.5)
-    // the r12 window replayed: q25/q26b/q10 agree-slow (40–67x quiet),
-    // q31 already unhealed-bimodal, q55 steady
-    val measured = Seq("q10" -> 12.445, "q25" -> 16.264, "q26b" -> 15.454,
-      "q31" -> 9.0, "q55" -> 1.4)
-    val got = Bench.reprobeCandidates(measured, cold, unhealed = Set("q31"))
-    assert(got === Seq("q10", "q25", "q26b", "q31"), got)
-    // every triggered query re-probes — r13 truncated to the 16 worst
-    // ratios, shipping the rest unhealed in a catalog-wide episode
-    // (VERDICT r13 #5; the cap was removed as dead weight in review)
-    // failures (-1 medians) are never candidates, even if listed unhealed
-    val withFail = Bench.reprobeCandidates(Seq("q01" -> -1.0), Map.empty,
-      unhealed = Set("q01"))
-    assert(withFail === Nil)
-    // a query with no cold reading never triggers agree-slow
-    val noCold = Bench.reprobeCandidates(Seq("q02" -> 5.0), Map.empty,
-      unhealed = Set.empty)
-    assert(noCold === Nil)
-    // quiet window: nothing fires
-    val quiet = Bench.reprobeCandidates(
-      Seq("q10" -> 0.30, "q25" -> 0.24), cold, unhealed = Set.empty)
-    assert(quiet === Nil)
-  }
-
-  test("a >16-query agree-slow storm re-probes every triggered query — no unhealed outlier ships (VERDICT r13 #5)") {
-    // synthetic catalog-wide episode: 20 queries all warm≈10x their cold
-    // single-shot. The r13 cap kept the 16 worst ratios and shipped the
-    // other 4 at their inflated readings; the escalation rule returns
-    // all 20 so the under-half adoption gate sees every one.
-    val names = (1 to 20).map(i => f"q$i%03d_storm")
-    val cold = names.map(_ -> 0.4).toMap
-    val measured = names.zipWithIndex.map { case (n, i) =>
-      n -> (3.0 + i * 0.1) } // all > 0.3 floor and > 2x cold
-    val got = Bench.reprobeCandidates(measured, cold, unhealed = Set.empty)
-    assert(got === names, got)
-    // at or below the threshold, the few-outliers behavior is unchanged
-    val few = measured.take(3)
-    assert(Bench.reprobeCandidates(few, cold, unhealed = Set.empty) ===
-      names.take(3))
-  }
-
-  test("the r12 agree-slow outliers heal end-to-end through the rule chain") {
-    // the full decision chain the driver window exercises: bimodal misses
-    // (reps agree), agreeSlow selects, adoptReprobe heals on the quiet
-    // end probe — the healed value is the probe median, the original
-    // stays on the record via reprobe_ms
-    val reps = Seq(16.1, 16.264, 16.9).sorted // all inside the episode
-    assert(!Bench.bimodalHigh(reps)) // the r12 gap: retry never fired
-    assert(Bench.agreeSlow(reps(1), 0.35)) // the new trigger does
-    // end probe minutes later, episode over: quiet readings adopt
-    assert(Bench.adoptReprobe(16.264, Seq(0.25, 0.24, 0.26)) === Some(0.25))
-    // an end probe still inside the episode adopts nothing
-    assert(Bench.adoptReprobe(16.264, Seq(15.8, 16.0, 17.1)) === None)
-  }
-
-  test("adoptReprobe: adopts only when the end probe reads under HALF the in-window median") {
-    // the r11 q106 shape: 5.618 s in-window, ~1.1 s once the episode passed
-    assert(Bench.adoptReprobe(5.618, Seq(1.2, 1.0, 1.1)) === Some(1.1))
-    // a probe that is itself contended changes nothing
-    assert(Bench.adoptReprobe(2.0, Seq(1.5, 1.6, 1.7)) === None)
-    // exactly half is NOT adopted (strict <): a 2x gap is single-window noise
-    assert(Bench.adoptReprobe(2.0, Seq(1.0, 1.0, 1.0)) === None)
-    // every probe rep failed -> keep the in-window reading
-    assert(Bench.adoptReprobe(5.0, Nil) === None)
-    // unsorted probe input is sorted before taking the median
-    assert(Bench.adoptReprobe(10.0, Seq(4.0, 1.0, 2.0)) === Some(2.0))
+  test("jsonLine — over 1950 characters keeps its head and the slowest half of queries_ms") {
+    val names = (1 to 148).map(i => f"q$i%03d_query")
+    // 5-digit ms values: the contended-window shape that overflows the tail
+    val results = names.zipWithIndex.map { case (n, i) => n -> (10.0 + i * 0.1) }
+    val line = Bench.jsonLine(results, results, results.map(_._1 -> 1.0), "sf0.1")
+    val qms = """"queries_ms":\{([^}]*)\}""".r.findFirstMatchIn(line).get.group(1)
+      .split(",").map(_.split(":")(0).stripPrefix("\"").stripSuffix("\""))
+    assert(line.startsWith("""{"metric":"total","value":"""), line.take(80))
+    assert(qms.toSeq === names.drop(74).map(Bench.qKey))
+    assert(line.length <= 1950, line.length)
+    assert(line.contains(""""n_failed":0,"floor":10.2,"cpu_s":0.148}}"""), line.takeRight(120))
   }
 }

@@ -206,18 +206,6 @@ class CodecBombSpec extends AnyFunSuite {
     assert(pages === Seq("ካ"), pages.map(_.map(_.toInt.toHexString)))
   }
 
-  test("RawPdfExtractor stream CPU bomb: 200k endstream-less `stream` markers walk in linear time") {
-    val raw = "%PDF-1.4\n" + ("stream\n" * 200000) +
-      "stream\nBT (last) Tj ET\nendstream\n"
-    val pages = timed(30000, "raw extract") {
-      RawPdfExtractor.extractPages(raw.getBytes(StandardCharsets.ISO_8859_1))
-    }
-    // every marker pairs with the single endstream lazily — first opener
-    // wins, so one (text-free) giant block plus nothing else; the pin is
-    // the wall-clock, the old regex ran O(k·n) here
-    assert(pages.size <= 1)
-  }
-
   test("a deflate-bomb entry the extractor never asked for costs nothing (central-directory read)") {
     // ZipInputStream.getNextEntry drains every SKIPPED entry through the
     // inflater to find the next header, so a bomb entry BEFORE the

@@ -6,8 +6,8 @@ import java.nio.charset.StandardCharsets.ISO_8859_1
   * ones: each page's Amharic text is shown only as 2-byte CIDs of a Type0
   * (Identity-H) font over a CIDFontType2 descendant, so it is recoverable
   * only through the font's Flate-compressed `/ToUnicode` CMap. Content
-  * streams are Flate-compressed too, which is what makes
-  * [[RawPdfExtractor]] degrade to nothing on it. Deterministic bytes.
+  * streams are Flate-compressed too, so no text is visible without
+  * decompressing them. Deterministic bytes.
   */
 private[graft] object EthiopicPdfFixture {
 

@@ -6,7 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * scanner, with the `(\d+)\s+0\s+obj` regex sweep it replaced. The regex
   * lives on here only as the oracle: the scanner must return exactly its
   * `(number, start, end)` list, with the same `toIntOption` skips and the
-  * same non-overlap.
+  * same non-overlap. Also the parity of [[FlatePdfExtractor.hex4]], the
+  * allocation-free 4-hex-digit reader, with the `parseInt(substring)`
+  * formula it replaced.
   */
 class FlatePdfScanSpec extends AnyFunSuite {
 
@@ -65,5 +67,25 @@ class FlatePdfScanSpec extends AnyFunSuite {
       java.nio.charset.StandardCharsets.ISO_8859_1)
     val headers = FlatePdfExtractor.objHeaders(raw)
     assert(headers.nonEmpty && headers === oracle(raw))
+  }
+
+  test("hex4 == Integer.parseInt(substring) on mixed-case hex, FFFF and an odd trailing digit") {
+    // both callers walk `i + 4 <= length`, so a trailing digit past the
+    // last whole group is never read
+    def units(hex: String)(read: (String, Int) => Int): Seq[Int] =
+      (0 to hex.length - 4 by 4).map(read(hex, _))
+    val formula = (hex: String, i: Int) => Integer.parseInt(hex.substring(i, i + 4), 16)
+    for (hex <- Seq("0000", "FFFF", "ffff", "12aB", "aBcDeF09", "00410042F",
+                    "1200fFfF7", "9", "")) {
+      val got = units(hex)(FlatePdfExtractor.hex4)
+      assert(got === units(hex)(formula), hex)
+      assert(got.size === hex.length / 4, hex)
+    }
+    assert(FlatePdfExtractor.hex4("FFFF", 0) === 0xFFFF)
+    assert(FlatePdfExtractor.hex4("x12aBy", 1) === 0x12AB)
+    val rnd = new scala.util.Random(7)
+    val digits = "0123456789abcdefABCDEF"
+    val soup = Seq.fill(4001)(digits(rnd.nextInt(digits.length))).mkString
+    assert(units(soup)(FlatePdfExtractor.hex4) === units(soup)(formula))
   }
 }

@@ -99,22 +99,6 @@ class PipelineSpec extends SparkSpec {
     assert(back.count() === 3)
   }
 
-  test("RawPdfExtractor — uncompressed-stream fixture + garbage input") {
-    val pdf = ("%PDF-1.4\n1 0 obj\n<< /Type /Page >>\nstream\n" +
-      "BT (Hello) Tj (World) Tj ET\nendstream\nendobj\n%%EOF")
-      .getBytes(StandardCharsets.ISO_8859_1)
-    assert(RawPdfExtractor.extractPages(pdf) === Seq("Hello World"))
-    assert(RawPdfExtractor.extractPages("not a pdf".getBytes) === Nil)
-    assert(RawPdfExtractor.extractPages(Array[Byte](0, 1, 2)) === Nil)
-  }
-
-  test("RawPdfExtractor — a compressed CID-font volume degrades to empty, never throws (SURVEY §7.4)") {
-    // the volume's streams are all Flate-compressed — the raw extractor
-    // must degrade to empty, never throw; the S16 channel handles it
-    // downstream
-    assert(RawPdfExtractor.extractPages(EthiopicPdfFixture.volume()) === Nil)
-  }
-
   test("FlatePdfExtractor — Amharic text through Type0/CID fonts and a Flate /ToUnicode CMap") {
     // the reference volumes' shape: page text shown only as 2-byte CIDs,
     // recoverable only through the font's compressed CMap
@@ -130,9 +114,6 @@ class PipelineSpec extends SparkSpec {
   test("reference snapshot — the real cassation volumes parse, decode Amharic and flow the pipeline") {
     val vol01 = graft.ReferenceSnapshot.bytes("vol01.pdf")
     val vol02 = graft.ReferenceSnapshot.bytes("vol02.pdf")
-    // vol01 uses compressed streams — the raw extractor must degrade to
-    // empty, never throw
-    assert(RawPdfExtractor.extractPages(vol01) != null)
     val pages = FlatePdfExtractor.extractPages(vol01)
     assert(pages.nonEmpty, "no pages extracted from vol01.pdf")
     val text = pages.mkString("\n")

@@ -424,7 +424,7 @@ class StreamingSpec extends SparkSpec {
         "src/test/resources/fixtures/minimal_statute.docx"),
       java.nio.file.Paths.get(s"$watch/Proc%201-2016.docx"))
     Streams.ingestPdfStream(spark, watch, out, ckpt(),
-      graft.etl.SniffingExtractor(graft.etl.RawPdfExtractor), "2026-08-15",
+      graft.etl.SniffingExtractor(), "2026-08-15",
       globFilter = "*.{pdf,docx}",
       category = graft.etl.DocOps.autoCategory(col("url")))
     val docs = graft.etl.Pipeline.readDocs(spark, s"$out/documents/*")
@@ -456,6 +456,29 @@ class StreamingSpec extends SparkSpec {
     Streams.ingestPdfStream(spark, watch, out, checkpoint,
       graft.etl.FlatePdfExtractor, "2026-08-12", deleteQuarantined = true)
     assert(Files.exists(good))
+  }
+
+  test("ingest stream with compensating delete — two extractions per row; the delete reads the written quarantine") {
+    import graft.etl.CountingExtractor
+    val watch = Files.createTempDirectory("graft_countwatch").toString
+    val out = Files.createTempDirectory("graft_countout").toString
+    def put(name: String, text: String) = {
+      val p = java.nio.file.Paths.get(s"$watch/$name")
+      Files.write(p, text.getBytes("UTF-8")); p
+    }
+    val a = put("a.pdf", "alpha")
+    val b = put("b.pdf", "beta\fgamma")
+    val c = put("c.pdf", "\f ") // no text → quarantine
+    CountingExtractor.extractions.set(0)
+    Streams.ingestPdfStream(spark, watch, out, ckpt(), CountingExtractor,
+      "2026-08-12", deleteQuarantined = true)
+    // one extraction per row for each channel sink, none for the delete
+    assert(CountingExtractor.extractions.get === 2 * 3)
+    assert(spark.read.json(s"$out/quarantine/*").select("url", "reason")
+      .as[(String, String)].collect().toSeq.map(r => (r._1.split('/').last, r._2))
+      === Seq("c.pdf" -> "empty-text"))
+    assert(!Files.exists(c), "quarantined binary should be deleted")
+    assert(Files.exists(a) && Files.exists(b))
   }
 
   test("stream ⋈ static enrichment — equals the batch join") {
