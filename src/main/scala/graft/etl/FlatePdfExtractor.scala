@@ -871,9 +871,15 @@ object FlatePdfExtractor extends PageExtractor {
     sb.toString
   }
 
-  private def unescape(t: String): String =
-    t.replace("\\(", "(").replace("\\)", ")").replace("\\\\", "\\")
-      .replaceAll("""\\[rn]""", " ")
+  /** The text of the literal string whose `(` is at `s(open)` — the
+    * §7.3.4.2 escapes decoded by [[PdfDecrypt.literal]], one char per
+    * byte as the content stream itself is read. Callers pass the start
+    * of a [[TjRe]] or [[LitRe]] match, whose body holds no unescaped
+    * paren, so the decoder closes at the match's own `)`.
+    */
+  private def literalText(s: String, open: Int): String =
+    PdfDecrypt.literal(s, open)
+      .map(new String(_, StandardCharsets.ISO_8859_1)).getOrElse("")
 
   /** `[ … ] TJ` array bodies as (start, body), linear: TJ-close positions
     * come from a fixed-shape regex scan, then each `[` pairs with the
@@ -904,7 +910,7 @@ object FlatePdfExtractor extends PageExtractor {
     // walk the stream once, tracking the current font across Tf/Tj/TJ in order
     val events = (
       TfRe.findAllMatchIn(content).map(m => (m.start, "Tf", m.group(1))) ++
-      TjRe.findAllMatchIn(content).map(m => (m.start, "Tj", m.group(1))) ++
+      TjRe.findAllMatchIn(content).map(m => (m.start, "Tj", "")) ++
       tjSegments(content).iterator.map { case (s, b) => (s, "TJ", b) }
     ).toSeq.sortBy(_._1)
     var cmap: Map[Int, String] = Map.empty
@@ -918,17 +924,17 @@ object FlatePdfExtractor extends PageExtractor {
     }
     events.foreach {
       case (_, "Tf", name) => cmap = fonts.getOrElse(name, Map.empty)
-      case (_, "Tj", lit) => sb.append(unescape(lit))
+      case (start, "Tj", _) => sb.append(literalText(content, start))
       case (_, "TJ", arr) =>
         // hex and literal elements interleave in one TJ array — emit both
         // in positional order (dropping literals when any hex is present
         // would silently lose mixed-font text)
         val elems =
           HexRe.findAllMatchIn(arr).map(m => (m.start, "hex", m.group(1))) ++
-          LitRe.findAllMatchIn(arr).map(m => (m.start, "lit", m.group(1)))
+          LitRe.findAllMatchIn(arr).map(m => (m.start, "lit", ""))
         elems.toSeq.sortBy(_._1).foreach {
           case (_, "hex", h) => emitHex(h)
-          case (_, _, lit) => sb.append(unescape(lit))
+          case (start, _, _) => sb.append(literalText(arr, start))
         }
       case _ => ()
     }

@@ -211,12 +211,55 @@ private[etl] object PdfDecrypt {
     else dict.substring(s, e).toIntOption
   }
 
-  /** A PDF string value for /name: hex `<…>` or literal `(…)` with
-    * backslash escapes (binary bytes survive the ISO_8859_1 round
-    * trip). Octal escapes, the single-char escapes, backslash-EOL line
-    * continuations (NO bytes — §7.3.4.2, r13 review: a binary /O
-    * containing 0x5C 0x0A parsed one byte long), and escaped-anything
-    * fallback.
+  /** The bytes of the literal string whose `(` is at `s(open)`, up to
+    * its balanced `)` (ISO 32000-1 §7.3.4.2): octal escapes of one to
+    * three digits, `\n \r \t \b \f`, backslash-EOL line continuations
+    * (NO bytes — a binary /O containing 0x5C 0x0A once parsed one byte
+    * long), an escaped anything as itself (`\( \) \\`), and
+    * unescaped balanced parens kept. One char is one byte (the caller's
+    * ISO_8859_1 decoding). None when the string never closes. The
+    * encryption dict's /O /U values and the show-text operands of page
+    * content streams both decode here.
+    */
+  private[etl] def literal(s: String, open: Int): Option[Array[Byte]] = {
+    val out = new java.io.ByteArrayOutputStream()
+    var q = open + 1
+    var depth = 1
+    while (q < s.length && depth > 0) {
+      s.charAt(q) match {
+        case '\\' if q + 1 < s.length =>
+          s.charAt(q + 1) match {
+            case 'n' => out.write('\n'); q += 2
+            case 'r' => out.write('\r'); q += 2
+            case 't' => out.write('\t'); q += 2
+            case 'b' => out.write('\b'); q += 2
+            case 'f' => out.write('\f'); q += 2
+            case '\n' => q += 2 // line continuation: no bytes
+            case '\r' =>
+              q += (if (q + 2 < s.length && s.charAt(q + 2) == '\n') 3
+                    else 2) // CR or CRLF continuation: no bytes
+            case d if d >= '0' && d <= '7' =>
+              var oct = 0; var n = 0; q += 1
+              while (n < 3 && q < s.length &&
+                     s.charAt(q) >= '0' && s.charAt(q) <= '7') {
+                oct = oct * 8 + (s.charAt(q) - '0'); q += 1; n += 1
+              }
+              out.write(oct & 0xff)
+            case c => out.write(c); q += 2 // \( \) \\ and any other
+          }
+        case '(' => depth += 1; out.write('('); q += 1
+        case ')' =>
+          depth -= 1
+          if (depth > 0) out.write(')')
+          q += 1
+        case c => out.write(c); q += 1
+      }
+    }
+    if (depth != 0) None else Some(out.toByteArray)
+  }
+
+  /** A PDF string value for /name: hex `<…>` or a [[literal]] `(…)`
+    * (binary bytes survive the ISO_8859_1 round trip).
     */
   private[etl] def strVal(dict: String, name: String): Option[Array[Byte]] = {
     var p = keyPos(dict, name)
@@ -235,41 +278,7 @@ private[etl] object PdfDecrypt {
             .map(h => Integer.parseInt(h, 16).toByte).toArray)
           catch { case _: NumberFormatException => None }
         }
-      case '(' =>
-        val out = new java.io.ByteArrayOutputStream()
-        var q = p + 1
-        var depth = 1
-        while (q < dict.length && depth > 0) {
-          dict.charAt(q) match {
-            case '\\' if q + 1 < dict.length =>
-              dict.charAt(q + 1) match {
-                case 'n' => out.write('\n'); q += 2
-                case 'r' => out.write('\r'); q += 2
-                case 't' => out.write('\t'); q += 2
-                case 'b' => out.write('\b'); q += 2
-                case 'f' => out.write('\f'); q += 2
-                case '\n' => q += 2 // line continuation: no bytes
-                case '\r' =>
-                  q += (if (q + 2 < dict.length && dict.charAt(q + 2) == '\n') 3
-                        else 2) // CR or CRLF continuation: no bytes
-                case d if d >= '0' && d <= '7' =>
-                  var oct = 0; var n = 0; q += 1
-                  while (n < 3 && q < dict.length &&
-                         dict.charAt(q) >= '0' && dict.charAt(q) <= '7') {
-                    oct = oct * 8 + (dict.charAt(q) - '0'); q += 1; n += 1
-                  }
-                  out.write(oct & 0xff)
-                case c => out.write(c); q += 2 // \( \) \\ and any other
-              }
-            case '(' => depth += 1; out.write('('); q += 1
-            case ')' =>
-              depth -= 1
-              if (depth > 0) out.write(')')
-              q += 1
-            case c => out.write(c); q += 1
-          }
-        }
-        if (depth != 0) None else Some(out.toByteArray)
+      case '(' => literal(dict, p)
       case _ => None
     }
   }

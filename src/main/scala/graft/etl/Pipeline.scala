@@ -90,6 +90,21 @@ object Pipeline {
     * them; a url staged twice stays one row (its pages merged by
     * `(pos, txt)`, its reason the minimum over its copies).
     *
+    * The per-row projection — `(url, pages, reason)`, text only — is
+    * persisted lazily and shared: `process` runs no job, the first
+    * channel action extracts and diagnoses each row once, and the other
+    * channel reassembles from the cached rows (a lost block recomputes
+    * from the lineage). The cache lives exactly as long as the channel
+    * frames: once neither is reachable, a [[java.lang.ref.Cleaner]]
+    * unpersists it, so no caller releases anything. Nothing is shared
+    * across `process` calls — each call's UDFs are new instances, so a
+    * re-staged path is always extracted afresh. The rows are cached, not
+    * the url-keyed aggregate: under AQE, Spark plans a cached query with
+    * its final shuffle left uncoalesced, so a cached aggregate runs at
+    * the static `spark.sql.shuffle.partitions` width (200 in a default
+    * session, as `RunPipeline` runs) however small the batch. The rows
+    * have no shuffle, and each channel's aggregate coalesces as before.
+    *
     * @param keepEmptyPages mcp_server.py:27-28 keeps empty pages as "";
     *                       the CLI pipeline drops them (fetch_legal_docs.py:63).
     * @param ingestDate     injected run date (reference uses today();
@@ -124,6 +139,7 @@ object Pipeline {
     val rows = pages.select(col("url"), col("pages"),
       when(col("url").isNull || !hasText, diagnoseUdf(col("content")))
         .as("reason"))
+      .persist()
 
     // S10: ordered reassembly — the url's pages sorted by (pos, txt) and
     // joined (DocOps.joinPages). S11 gate: whitespace-only text means a
@@ -143,7 +159,25 @@ object Pipeline {
         .as("doc"))
       .select("doc.*")
     val quarantine = reassembled.filter(!isDoc).select("url", "reason")
+    unpersistWhenUnreachable(rows, good, quarantine)
     Processed(good, quarantine)
+  }
+
+  /** One daemon thread for every `process` call's cache release. Lazy:
+    * an executor that deserializes a UDF closure never starts it.
+    */
+  private lazy val cleaner = java.lang.ref.Cleaner.create()
+
+  /** Unpersists `cached` once none of `readers` is reachable — the rule
+    * Spark's ContextCleaner applies to RDDs and shuffles. The release
+    * action holds `cached` and a countdown, never a reader.
+    */
+  private def unpersistWhenUnreachable(cached: DataFrame,
+                                       readers: DataFrame*): Unit = {
+    val live = new java.util.concurrent.atomic.AtomicInteger(readers.size)
+    val release: Runnable = () =>
+      if (live.decrementAndGet() == 0) cached.unpersist(blocking = false)
+    readers.foreach(cleaner.register(_, release))
   }
 
   /** S15 — document sink: UTF-8 JSON, non-ASCII preserved (Spark writes

@@ -44,8 +44,7 @@ object RunPipeline {
     Pipeline.writeDocs(out.docs, s"$outDir/documents")
     out.quarantine.write.mode("overwrite").json(s"$outDir/quarantine")
     val nDocs = Pipeline.readDocs(spark, s"$outDir/documents").count()
-    // count what was written, read back with a fixed schema: counting
-    // `out.quarantine` would extract the corpus a third time, and a
+    // count what was written, read back with a fixed schema: a
     // schema-inferring read of an empty quarantine dir (the all-parsed
     // success path) has no schema to infer and crashes
     val nQuar = spark.read.schema("url STRING, reason STRING")

@@ -336,11 +336,10 @@ object Streams {
       .select(col("path").as("url"), col("content"))
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // persist: the two channel sinks and the raster-loss pass each read
-        // the batch — without this every one of them would re-read the
-        // staged files. Each channel sink still runs its own extraction
-        // (Pipeline.process reads the batch once per action), so a batch
-        // is extracted twice.
+        // A batch is extracted once: the two channel sinks share the
+        // extracted rows Pipeline.process caches. persist serves the
+        // raster-loss pass, the batch's second reader, which would
+        // otherwise re-read the staged files.
         batch.persist()
         try {
           val out = graft.etl.Pipeline.process(batch, extractor, ingestDate,
@@ -394,9 +393,8 @@ object Streams {
           } finally loss.unpersist()
           // compensating action AFTER the quarantine record is durable —
           // the audit row survives even if the delete pass is replayed. It
-          // deletes what that record holds, read back with a fixed schema:
-          // re-evaluating `out.quarantine` would extract the batch a third
-          // time, and an empty quarantine has no schema to infer.
+          // deletes exactly what that record holds, read back with a fixed
+          // schema (an empty quarantine has none to infer).
           if (deleteQuarantined)
             graft.etl.Pipeline.compensatingDelete(
               batch.sparkSession.read.schema("url STRING, reason STRING")

@@ -29,6 +29,25 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def sf0001: String = SparkSpec.sf0001
   def sf001: String = SparkSpec.sf001
+
+  /** `body` with the runtime confs `kv` set on the shared session, each
+    * restored (or unset) afterwards.
+    */
+  def withConfs[A](kv: (String, String)*)(body: => A): A = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try { kv.foreach { case (k, v) => spark.conf.set(k, v) }; body }
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** `body` under the runtime confs of the bench session
+    * (`SparkBoot.session`): AQE off, shuffle width 8.
+    */
+  def benchConf[A](body: => A): A = withConfs(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> "8")(body)
 }
 
 /** Shared assertion helpers for spec code (kept out of SparkSpec so

@@ -462,23 +462,140 @@ class PipelineSpec extends SparkSpec {
     assert(quarantine === Seq("https://x/blank.pdf" -> "empty-text"))
   }
 
-  test("narrow pass — one extraction per row per action; diagnosis only for rows without text") {
+  // ------------------------------------ the shared rows and their lifetime
+
+  /** Three staged rows: two with text, one (c.pdf) without. */
+  private def stagedThree(): String = {
     val dir = Files.createTempDirectory("graft_staged").resolve("bins").toString
     binDf("https://x/a.pdf" -> "alpha", "https://x/b.pdf" -> "beta\fgamma",
       "https://x/c.pdf" -> "\f ").write.parquet(dir)
-    val out = Pipeline.process(spark.read.parquet(dir), CountingExtractor,
-      "2026-08-12")
-    def counted[A](body: => A): (Int, Int) = {
-      CountingExtractor.extractions.set(0); CountingExtractor.diagnoses.set(0)
-      body
-      (CountingExtractor.extractions.get, CountingExtractor.diagnoses.get)
+    dir
+  }
+
+  /** `body`'s value, with the jobs it started and the codec calls it made
+    * as (extractions, diagnoses).
+    */
+  private def counted[A](body: => A): (A, Int, (Int, Int)) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
     }
-    // the document channel never diagnoses; the quarantine channel
-    // diagnoses only c.pdf — the extraction is not inlined into the reason
-    assert(counted(out.docs.collect()) === ((3, 0)))
-    assert(counted(out.quarantine.collect()) === ((3, 1)))
-    assert(out.quarantine.as[(String, String)].collect().toSeq ===
-      Seq("https://x/c.pdf" -> "empty-text"))
+    org.apache.spark.GraftListenerDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      CountingExtractor.extractions.set(0); CountingExtractor.diagnoses.set(0)
+      val a = body
+      org.apache.spark.GraftListenerDrain.drain(sc)
+      (a, jobs.get,
+        (CountingExtractor.extractions.get, CountingExtractor.diagnoses.get))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("narrow pass — process runs no job and no extraction, with AQE off and on") {
+    val dir = stagedThree()
+    for (aqe <- Seq("false", "true")) withConfs(
+        "spark.sql.adaptive.enabled" -> aqe,
+        "spark.sql.shuffle.partitions" -> "8") {
+      val bins = spark.read.parquet(dir)
+      val (_, jobs, calls) = counted(
+        Pipeline.process(bins, CountingExtractor, "2026-08-12"))
+      assert(jobs === 0, s"AQE $aqe")
+      assert(calls === ((0, 0)), s"AQE $aqe")
+    }
+  }
+
+  test("narrow pass — one extraction per row per batch, whichever channel runs first") {
+    benchConf {
+      val dir = stagedThree()
+      def channelsIn(docsFirst: Boolean) = {
+        val out = Pipeline.process(spark.read.parquet(dir), CountingExtractor,
+          "2026-08-12")
+        val docs = () => out.docs.select("sourceURL").as[String].collect().sorted.toSeq
+        val quarantine = () => out.quarantine.as[(String, String)].collect().toSeq
+        counted(
+          if (docsFirst) { val d = docs(); (d, quarantine()) }
+          else { val q = quarantine(); (docs(), q) })
+      }
+      for (docsFirst <- Seq(true, false)) {
+        val ((docs, quarantine), _, calls) = channelsIn(docsFirst)
+        // the first channel action extracts every row and diagnoses only
+        // c.pdf, the row without text; the second reassembles the cached
+        // rows
+        assert(calls === ((3, 1)), s"docs first: $docsFirst")
+        assert(docs === Seq("https://x/a.pdf", "https://x/b.pdf"))
+        assert(quarantine === Seq("https://x/c.pdf" -> "empty-text"))
+      }
+    }
+  }
+
+  test("narrow pass — two process calls over the same staged input extract twice") {
+    benchConf {
+      val dir = stagedThree()
+      // nothing is reused across calls: a re-staged path is never read
+      // from an earlier call's text
+      val (_, _, calls) = counted {
+        for (_ <- 1 to 2) {
+          val out = Pipeline.process(spark.read.parquet(dir), CountingExtractor,
+            "2026-08-12")
+          out.docs.collect(); out.quarantine.collect()
+        }
+      }
+      assert(calls === ((6, 2)))
+    }
+  }
+
+  test("narrow pass — the shared rows are released once both channel frames are unreachable") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val cache = session.sharedState.cacheManager
+    val dir = stagedThree()
+    // run both channels inside a frame of their own, so nothing on this
+    // test's stack keeps them reachable; keep only the cached plan, the
+    // per-row projection the reassembly reads
+    def drained(): LogicalPlan = {
+      val out = Pipeline.process(spark.read.parquet(dir), CountingExtractor,
+        "2026-08-12")
+      out.docs.collect(); out.quarantine.collect()
+      out.docs.queryExecution.analyzed
+        .collectFirst { case a: Aggregate => a.child }.get
+    }
+    val plan = drained()
+    assert(cache.lookupCachedData(session, plan).nonEmpty)
+    org.scalatest.concurrent.Eventually.eventually(
+        org.scalatest.concurrent.Eventually.timeout(
+          org.scalatest.time.Span(30, org.scalatest.time.Seconds))) {
+      System.gc()
+      assert(cache.lookupCachedData(session, plan).isEmpty)
+    }
+  }
+
+  test("narrow pass — channel rows are identical with AQE on and off (mixed sniffing corpus)") {
+    val docx = Files.readAllBytes(java.nio.file.Paths.get(
+      "src/test/resources/fixtures/minimal_statute.docx"))
+    val dir = Files.createTempDirectory("graft_staged").resolve("bins").toString
+    Seq(
+      ("https://x/vol01.pdf", EthiopicPdfFixture.volume()),
+      ("https://x/Proc%201-2016.docx", docx),
+      ("https://x/vol03.doc", DocFixtures.doc(Seq(("Decided 1995\r", true)))),
+      ("https://x/locked.doc", DocFixtures.rc4Doc("x", Seq(("hidden\r", true)))),
+      ("https://x/junk.bin", "not a document".getBytes("UTF-8")),
+      ((null: String), "no url".getBytes("UTF-8")))
+      .toDF("url", "content").write.parquet(dir)
+    def run(aqe: String) = withConfs("spark.sql.adaptive.enabled" -> aqe) {
+      val out = Pipeline.process(spark.read.parquet(dir), SniffingExtractor(),
+        "2026-08-12", category = DocOps.autoCategory(col("url")))
+      (out.docs.select("sourceURL", "content").as[(String, String)].collect().toSet,
+        out.quarantine.as[(String, String)].collect().toSet)
+    }
+    val (docs, quarantine) = run("false")
+    assert(docs.map(_._1) === Set("https://x/Proc%201-2016.docx",
+      "https://x/vol01.pdf", "https://x/vol03.doc"))
+    assert(quarantine === Set("https://x/junk.bin" -> "not-pdf-or-docx",
+      "https://x/locked.doc" -> "encrypted", (null: String) -> "not-pdf-or-docx"))
+    assert(run("true") === ((docs, quarantine)))
   }
 
   test("narrow pass — neither channel joins, and no exchange carries the binaries") {

@@ -20,19 +20,6 @@ class ScanFanoutRuleSpec extends SparkSpec {
 
   private val rule = classOf[ScanFanoutRule].getName
 
-  private def withConfs[A](kv: (String, String)*)(body: => A): A = {
-    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try { kv.foreach { case (k, v) => spark.conf.set(k, v) }; body }
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  private def benchConf[A](body: => A): A = withConfs(
-    "spark.sql.adaptive.enabled" -> "false",
-    "spark.sql.shuffle.partitions" -> "8")(body)
-
   private def fanouts(p: LogicalPlan): Seq[RepartitionByExpression] =
     p.collect { case r: RepartitionByExpression => r }
 

@@ -458,7 +458,7 @@ class StreamingSpec extends SparkSpec {
     assert(Files.exists(good))
   }
 
-  test("ingest stream with compensating delete — two extractions per row; the delete reads the written quarantine") {
+  test("ingest stream with compensating delete — one extraction per row; the delete reads the written quarantine") {
     import graft.etl.CountingExtractor
     val watch = Files.createTempDirectory("graft_countwatch").toString
     val out = Files.createTempDirectory("graft_countout").toString
@@ -472,8 +472,9 @@ class StreamingSpec extends SparkSpec {
     CountingExtractor.extractions.set(0)
     Streams.ingestPdfStream(spark, watch, out, ckpt(), CountingExtractor,
       "2026-08-12", deleteQuarantined = true)
-    // one extraction per row for each channel sink, none for the delete
-    assert(CountingExtractor.extractions.get === 2 * 3)
+    // one extraction per row: the two channel sinks share one reassembly,
+    // and the delete reads what the quarantine sink wrote
+    assert(CountingExtractor.extractions.get === 1 * 3)
     assert(spark.read.json(s"$out/quarantine/*").select("url", "reason")
       .as[(String, String)].collect().toSeq.map(r => (r._1.split('/').last, r._2))
       === Seq("c.pdf" -> "empty-text"))
