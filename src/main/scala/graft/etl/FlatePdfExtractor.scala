@@ -1,7 +1,9 @@
 package graft.etl
 
 import java.nio.charset.StandardCharsets
+import scala.collection.mutable.ArrayBuffer
 import scala.util.matching.Regex
+import PdfSyntax.{RefRe, dictEntries, isPdfWs, regular, tokenEnd}
 
 /** Best-effort pure-JVM PDF text extractor (no external deps — the
   * zero-egress answer to SURVEY §7.4). Handles the dominant
@@ -12,16 +14,36 @@ import scala.util.matching.Regex
   *     ASCIIHexDecode, ASCII85Decode, RunLengthDecode — plus PNG
   *     `/Predictor` 10–15 and TIFF 2 un-filtering from per-stage
   *     `/DecodeParms` after the decompressor (the xref-stream shape),
-  *   - per-font /ToUnicode CMaps (bfchar + bfrange) mapping 2-byte CIDs to
-  *     Unicode — which is how the reference corpus encodes Amharic,
-  *   - `(…) Tj` literal and `[ <hex> (lit) … ] TJ` array show-text
-  *     operators, with the current font tracked via `/Fn … Tf`.
-  * One page per content stream containing a text block (matches the
-  * reference volumes). Never throws on garbage — returns Nil.
-  * Extracts the real Ethiopic text of /root/reference/vol01.pdf (asserted
-  * in PipelineSpec); LZW and predictor paths are fixture-tested
-  * (MultimodalSpec, FlatePdfLzwSpec — decoder pinned against the PDF
-  * spec's own LZWDecode worked example).
+  *   - per-font /ToUnicode CMaps (bfchar + bfrange), read at the font's
+  *     code width: 2-byte CIDs for `/Subtype /Type0` — which is how the
+  *     reference corpus encodes Amharic — and 1-byte codes otherwise,
+  *   - the show-text operators Tj, TJ, `'` and `"` (ISO 32000-1 §9.4.3),
+  *     with hex or literal operands, the current font tracked via
+  *     `/Fn … Tf`, all read by one linear content-stream lexer (§7.8.2).
+  *
+  * Stream bodies decode on demand, once each. Only two kinds ever do:
+  * page-text candidates, and the `/ToUnicode` CMaps of the fonts a page
+  * selects. A stream is a candidate unless its own dictionary marks it as
+  * something else — `/Length1`–`/Length3` an embedded font program
+  * (Table 127), a `/Subtype` other than `/Form` an image, FontFile3 or
+  * XML metadata, a `/Type` of `/XRef`, `/ObjStm`, `/Metadata` or
+  * `/EmbeddedFile` a structural stream — so the font programs that fill
+  * most of a reference volume's bytes are never inflated.
+  *
+  * Pages follow the page tree (trailer `/Root` → `/Pages` → `/Kids`,
+  * §7.7.3), one page per leaf, its `/Contents` array read as one stream;
+  * a stream shows on the first page that names it only. Candidate
+  * streams no tree page names come after them, each its own page in
+  * object-number order: Form XObjects, bare-stream documents and
+  * documents whose tree does not resolve. A page whose content holds no
+  * text block (`BT`) or no text yields nothing. All pages of a document
+  * show at most [[MaxDecodedStreamBytes]] chars. Never throws on garbage —
+  * returns Nil. The real Ethiopic text of the reference's vol01.pdf is
+  * asserted in MultimodalSpec (canceled when the reference snapshot is
+  * absent); the in-repo `EthiopicPdfFixture` volume carries the same
+  * shape. LZW and predictor paths are fixture-tested (MultimodalSpec,
+  * FlatePdfLzwSpec — decoder pinned against the PDF spec's own LZWDecode
+  * worked example).
   *
   * Encrypted documents (r13, [[PdfDecrypt]]): the Standard security
   * handler with an EMPTY user password — R2/R3/R4 RC4, R4 AESV2,
@@ -37,15 +59,11 @@ import scala.util.matching.Regex
   */
 object FlatePdfExtractor extends PageExtractor {
 
-  private val TfRe: Regex = """/(\w+)\s+[\d.]+\s+Tf""".r
-  private val TjRe: Regex = """\(((?:[^()\\]++|\\.)*+)\)\s*Tj""".r
-  private val TJCloseRe: Regex = """\]\s*TJ""".r
-  private val HexRe: Regex = """<([0-9A-Fa-f]+)>""".r
-  private val LitRe: Regex = """\(((?:[^()\\]++|\\.)*+)\)""".r
   private val WhitespaceRe = java.util.regex.Pattern.compile("\\s+")
   private val HexPairRe: Regex = """<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>""".r
   private val RangeTripleRe: Regex =
     """<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>""".r
+  private val FontNameRe: Regex = """/(\w+)\s+(\d+)\s+0\s+R""".r
 
   /** Decompression ceiling PER STREAM (r12 — the DOCX MaxDocumentXmlBytes
     * lesson applied to the network-admitted PDF path): Flate expands up
@@ -269,10 +287,11 @@ object FlatePdfExtractor extends PageExtractor {
       slices.filter(_._1 == n).lastOption.flatMap { case (_, encDict, _) =>
         // /ID's FIRST element — the one key derivation uses — is
         // revision-INVARIANT by spec (§14.4: only the second element
-        // changes on update), so any carrier's /ID serves; trailers
-        // lead the search text, xref-ish dicts follow.
+        // changes on update), so any carrier's /ID serves: the first
+        // of the trailers, then of the xref-ish dicts.
         val idText = (trailerDicts(raw) ++
-          slices.map(_._2).filter(_.contains("/ID"))).mkString(" ")
+          slices.map(_._2).filter(_.contains("/ID")))
+          .find(dictEntries(_).contains("ID")).getOrElse("")
         PdfDecrypt.open(encDict, idText, password)
       }
     }
@@ -738,120 +757,241 @@ object FlatePdfExtractor extends PageExtractor {
     // streams decode to garbage → Nil → the `encrypted` quarantine.
     val ctx = openEncryption(raw, slices, password)
 
-    // object number → (header dict text, decoded stream body if any);
-    // stream data runs from the marker EOL to the first `endstream`
-    // (missing endstream ⇒ no body, matching the old regex behavior).
-    // Under encryption, streams the handler exempts (xref streams,
-    // unencrypted metadata) decrypt to garbage and fail their filter
-    // decode — the usual per-stream degrade; nothing this extractor
-    // reads navigates through them.
-    val objs: Map[Int, (String, Option[String])] =
-      slices.map { case (num, dict, dataStart) =>
-        val body =
-          if (dataStart < 0) None
-          else {
-            val endIdx = raw.indexOf("endstream", dataStart)
-            if (endIdx < 0) None
-            else {
-              // the DIRECT /Length is authoritative when plausible
-              // (r13 review): stripFramingEol's \r\n branch eats a real
-              // trailing 0x0D payload byte when the writer framed with a
-              // bare \n — harmless for self-terminating codecs, but an
-              // AES ciphertext ending in 0x0D then fails the %16 check
-              // and silently drops the page. Indirect `/Length N 0 R`
-              // and implausible values (gap past framing) fall back to
-              // the endstream scan.
-              val declared = LengthRe.findFirstMatchIn(dict)
-                .flatMap(_.group(1).toIntOption)
-                .filter(l => l >= 0 && dataStart.toLong + l <= endIdx &&
-                  endIdx - (dataStart + l) <= 4)
-              val data = declared match {
-                case Some(l) => raw.substring(dataStart, dataStart + l)
-                  .getBytes(StandardCharsets.ISO_8859_1)
-                case None => stripFramingEol(raw.substring(dataStart, endIdx)
-                  .getBytes(StandardCharsets.ISO_8859_1))
-              }
-              val plain = ctx match {
-                case Some(c) => PdfDecrypt.decryptStream(c, num, data)
-                case None => Some(data)
-              }
-              plain.flatMap(decodeStream(dict, _))
-                .map(new String(_, StandardCharsets.ISO_8859_1))
-            }
-          }
-        num -> (dict, body)
-      }.toMap
+    // object number → (header dict text, stream data start | −1); the
+    // last definition wins, as an incremental update appends its own
+    val objs: Map[Int, (String, Int)] =
+      slices.map { case (num, dict, dataStart) => num -> ((dict, dataStart)) }.toMap
+    val bodies = scala.collection.mutable.HashMap[Int, Option[String]]()
+    def body(num: Int): Option[String] = bodies.getOrElseUpdate(num,
+      objs.get(num) match {
+        case Some((dict, dataStart)) if dataStart >= 0 =>
+          decodeBody(raw, num, dict, dataStart, ctx)
+        case _ => None
+      })
+    def candidate(num: Int): Boolean = objs.get(num).exists {
+      case (dict, dataStart) => dataStart >= 0 && textCandidate(dict)
+    }
 
-    // ToUnicode CMaps: font object number → cid → unicode string
-    def parseCMap(s: String): Map[Int, String] = {
-      // hexInt: attacker-controlled hex must SKIP its entry on overflow,
-      // never throw out of extract() to the whole-document Nil (r13
-      // review round 2 — the toIntOption class; Integer.parseInt on a
-      // <FFFFFFFF> CID aborted every page of the document)
-      def hexInt(h: String): Option[Int] =
-        if (h.isEmpty || h.length > 8) None
-        else java.lang.Long.parseLong(h, 16) match {
-          case v if v <= Int.MaxValue => Some(v.toInt)
-          case _ => None
-        }
-      val out = scala.collection.mutable.Map[Int, String]()
-      lazySegments(s, "beginbfchar", "endbfchar").foreach { seg =>
-        HexPairRe.findAllMatchIn(seg).foreach { p =>
-          hexInt(p.group(1)).foreach(cid => out(cid) = hexToUnicode(p.group(2)))
-        }
+    // font resource name (F1, F2, …) → the objects it names, in
+    // object-number order, scraped from /Font <<…>> dicts; a font's
+    // CMap decodes the first time a Tf selects it
+    lazy val fontRefs: Map[String, Seq[Int]] =
+      objs.keys.toSeq.sorted.flatMap { num =>
+        val dict = objs(num)._1
+        val fontIdx = dict.indexOf("/Font")
+        if (fontIdx < 0) Nil
+        else FontNameRe.findAllMatchIn(dict.substring(fontIdx)).flatMap { m =>
+          m.group(2).toIntOption.map(m.group(1) -> _)
+        }.toList
+      }.groupMap(_._1)(_._2)
+    // each font object and each CMap stream is read once, however many
+    // names (or fonts) point at it
+    val cmaps = scala.collection.mutable.HashMap[Int, Option[Map[Int, String]]]()
+    val fonts = scala.collection.mutable.HashMap[Int, Option[Font]]()
+    def font(num: Int): Option[Font] = fonts.getOrElseUpdate(num,
+      objs.get(num).flatMap { case (dict, _) =>
+        val e = dictEntries(dict)
+        e.get("ToUnicode").flatMap(refNum)
+          .flatMap(n => cmaps.getOrElseUpdate(n, body(n).map(parseCMap)))
+          .map(new Font(_, if (e.get("Subtype").contains("/Type0")) 2 else 1))
+      })
+    val named = scala.collection.mutable.HashMap[String, Font]()
+    // the last font so named that has a CMap, as the name scrape's
+    // last-wins map read it
+    def fontNamed(name: String): Font = named.getOrElseUpdate(name,
+      fontRefs.getOrElse(name, Nil).reverseIterator.flatMap(font)
+        .nextOption().getOrElse(NoCMap))
+
+    val tree = treePages(raw, objs)
+    val inTree = tree.iterator.flatten.toSet
+    val loose = objs.keys.filter(n => !inTree(n) && candidate(n)).toSeq.sorted
+    val contents = tree.iterator.map(_.filter(candidate).flatMap(body).mkString("\n")) ++
+      loose.iterator.flatMap(body)
+    // the text all pages may show, shared: a CMap can map one code to a
+    // long string, so show-text can outgrow its content many times over
+    var left = MaxDecodedStreamBytes
+    val pages = Vector.newBuilder[String]
+    while (left > 0 && contents.hasNext) {
+      val c = contents.next()
+      if (c.contains("BT")) {
+        val lexer = new ContentLexer(c, fontNamed, left)
+        val text = lexer.text()
+        left -= lexer.shown
+        if (text.nonEmpty) pages += text
       }
-      lazySegments(s, "beginbfrange", "endbfrange").foreach { seg =>
-        RangeTripleRe.findAllMatchIn(seg).foreach { t =>
-          (hexInt(t.group(1)), hexInt(t.group(2)), hexInt(t.group(3))) match {
-            case (Some(lo), Some(hi), Some(dst)) =>
-              // CIDs in this extractor are 16-bit (emitHex reads 4 hex
-              // digits) — a wider range is meaningless at best and a
-              // memory/CPU bomb at worst (a crafted <0> <7FFFFFFF> range
-              // would materialize 2^31 map entries). Skip, don't clamp:
-              // a clamp would fabricate mappings the document never uses.
-              // Per-entry code-point validity guards toChars (a dst near
-              // Int.MaxValue is not a throwable offense for other rows).
-              if (lo >= 0 && hi <= 0xFFFF) {
-                var c = lo
-                while (c <= hi) {
-                  val cp = dst + (c - lo)
-                  if (Character.isValidCodePoint(cp))
-                    out(c) = new String(Character.toChars(cp))
-                  c += 1
+    }
+    pages.result()
+  }
+
+  /** The decoded body of stream object `num`, whose data starts at
+    * `dataStart` and runs to the first `endstream` (missing endstream ⇒
+    * no body). Under encryption, streams the handler exempts (xref
+    * streams, unencrypted metadata) decrypt to garbage and fail their
+    * filter decode — the usual per-stream degrade; nothing this extractor
+    * reads navigates through them.
+    */
+  private def decodeBody(raw: String, num: Int, dict: String, dataStart: Int,
+                         ctx: Option[PdfDecrypt.Ctx]): Option[String] = {
+    val endIdx = raw.indexOf("endstream", dataStart)
+    if (endIdx < 0) return None
+    // the DIRECT /Length is authoritative when plausible (r13 review):
+    // stripFramingEol's \r\n branch eats a real trailing 0x0D payload
+    // byte when the writer framed with a bare \n — harmless for
+    // self-terminating codecs, but an AES ciphertext ending in 0x0D then
+    // fails the %16 check and silently drops the page. Indirect
+    // `/Length N 0 R` and implausible values (gap past framing) fall back
+    // to the endstream scan.
+    val declared = LengthRe.findFirstMatchIn(dict)
+      .flatMap(_.group(1).toIntOption)
+      .filter(l => l >= 0 && dataStart.toLong + l <= endIdx &&
+        endIdx - (dataStart + l) <= 4)
+    val data = declared match {
+      case Some(l) => raw.substring(dataStart, dataStart + l)
+        .getBytes(StandardCharsets.ISO_8859_1)
+      case None => stripFramingEol(raw.substring(dataStart, endIdx)
+        .getBytes(StandardCharsets.ISO_8859_1))
+    }
+    val plain = ctx match {
+      case Some(c) => PdfDecrypt.decryptStream(c, num, data)
+      case None => Some(data)
+    }
+    plain.flatMap(decodeStream(dict, _))
+      .map(new String(_, StandardCharsets.ISO_8859_1))
+  }
+
+  /** `/Type` values of streams that hold no page text: cross-reference
+    * and object streams (§7.5.8, §7.5.7), XMP metadata (§14.3.2) and
+    * embedded files (§7.11.4).
+    */
+  private val StructuralTypes = Set("/XRef", "/ObjStm", "/Metadata", "/EmbeddedFile")
+
+  /** Whether a stream may hold page text, read from its own dictionary
+    * alone (ISO 32000-1): not when `/Length1`, `/Length2` or `/Length3`
+    * marks an embedded font program (Table 127), a `/Subtype` other than
+    * `/Form` an image, a FontFile3 program or XML metadata, or its
+    * `/Type` a [[StructuralTypes]] stream. Content streams and Form
+    * XObjects pass, and so does any stream that says nothing of itself.
+    * Needs no page tree, so it holds when objects sit in object streams.
+    */
+  private[etl] def textCandidate(dict: String): Boolean = {
+    val e = dictEntries(dict)
+    !e.contains("Length1") && !e.contains("Length2") && !e.contains("Length3") &&
+      e.get("Subtype").forall(_ == "/Form") &&
+      !e.get("Type").exists(StructuralTypes)
+  }
+
+  /** The object number of the `N G R` reference `v` starts with. */
+  private def refNum(v: String): Option[Int] =
+    RefRe.findPrefixMatchOf(v).flatMap(_.group(1).toIntOption)
+
+  /** The object numbers of every `N G R` reference in `v`, in order. */
+  private def refs(v: String): Seq[Int] =
+    RefRe.findAllMatchIn(v).flatMap(_.group(1).toIntOption).toSeq
+
+  /** The catalog's object number: the last `/Root N G R` in the file (an
+    * incremental update appends the live trailer), found from the end.
+    */
+  private def rootRef(raw: String): Option[Int] = {
+    var p = raw.lastIndexOf("/Root")
+    while (p >= 0) {
+      var q = p + 5
+      while (q < raw.length && isPdfWs(raw.charAt(q))) q += 1
+      val m = RefRe.pattern.matcher(raw).region(q, raw.length)
+      if (m.lookingAt()) return m.group(1).toIntOption
+      p = raw.lastIndexOf("/Root", p - 1)
+    }
+    None
+  }
+
+  /** The `/Contents` streams of each page of the page tree (§7.7.3), in
+    * tree order: trailer `/Root` → `/Pages` → `/Kids`, depth first. The
+    * walk keeps its own stack and visits each node once, so a cyclic or
+    * 100k-deep tree costs one pass. A leaf's `/Contents` is one stream or
+    * an array of them, direct or indirect. Every object counts once: a
+    * stream (or indirect array) shows on the first page that names it
+    * and on no later one, so a tree that names one stream thousands of
+    * times reads it once, and a document's pages hold no more content
+    * than its distinct streams. Nil when the tree does not resolve (no
+    * trailer, or a catalog inside an object stream).
+    */
+  private def treePages(raw: String, objs: Map[Int, (String, Int)]): Seq[Seq[Int]] = {
+    val out = Vector.newBuilder[Seq[Int]]
+    val seen = scala.collection.mutable.HashSet[Int]()
+    val todo = scala.collection.mutable.Stack[Int]()
+    rootRef(raw).flatMap(objs.get).flatMap(c => dictEntries(c._1).get("Pages"))
+      .flatMap(refNum).foreach(todo.push)
+    while (todo.nonEmpty) {
+      val num = todo.pop()
+      if (seen.add(num)) objs.get(num).foreach { case (dict, _) =>
+        val e = dictEntries(dict)
+        e.get("Kids") match {
+          case Some(kids) => refs(kids).reverseIterator.foreach(todo.push)
+          case None => e.get("Contents").foreach { c =>
+            val named =
+              if (c.startsWith("[")) refs(c)
+              else refNum(c).toSeq.flatMap { n =>
+                objs.get(n) match {
+                  case Some((arr, -1)) => // an indirect array
+                    if (seen.add(n)) refs(arr) else Nil
+                  case _ => Seq(n)
                 }
               }
-            case _ => // overflowed member: skip this range only
+            out += named.filter(seen.add)
           }
         }
       }
-      out.toMap
     }
-    val toUnicodeRe = """/ToUnicode\s+(\d+)\s+0\s+R""".r
-    val fontCmaps: Map[Int, Map[Int, String]] = objs.flatMap { case (num, (dict, _)) =>
-      toUnicodeRe.findFirstMatchIn(dict).flatMap { m =>
-        m.group(1).toIntOption.flatMap(objs.get).flatMap(_._2)
-          .map(s => num -> parseCMap(s))
+    out.result()
+  }
+
+  /** A `/ToUnicode` CMap's code → Unicode map (bfchar + bfrange). */
+  private def parseCMap(s: String): Map[Int, String] = {
+    // hexInt: attacker-controlled hex must SKIP its entry on overflow,
+    // never throw out of extract() to the whole-document Nil (r13
+    // review round 2 — the toIntOption class; Integer.parseInt on a
+    // <FFFFFFFF> CID aborted every page of the document)
+    def hexInt(h: String): Option[Int] =
+      if (h.isEmpty || h.length > 8) None
+      else java.lang.Long.parseLong(h, 16) match {
+        case v if v <= Int.MaxValue => Some(v.toInt)
+        case _ => None
+      }
+    val out = scala.collection.mutable.Map[Int, String]()
+    lazySegments(s, "beginbfchar", "endbfchar").foreach { seg =>
+      HexPairRe.findAllMatchIn(seg).foreach { p =>
+        hexInt(p.group(1)).foreach(cid => out(cid) = hexToUnicode(p.group(2)))
       }
     }
-    // font resource name (F1, F2, …) → cmap, scraped from /Font <<…>> dicts
-    val fontNameRe = """/(\w+)\s+(\d+)\s+0\s+R""".r
-    val nameToCmap: Map[String, Map[Int, String]] = objs.values.flatMap { case (dict, _) =>
-      val fontIdx = dict.indexOf("/Font")
-      if (fontIdx < 0) Nil
-      else fontNameRe.findAllMatchIn(dict.substring(fontIdx)).flatMap { m =>
-        m.group(2).toIntOption.flatMap(fontCmaps.get).map(m.group(1) -> _)
-      }.toList
-    }.toMap
-
-    // content streams with a text block, in document order = pages
-    val pages = objs.toSeq.sortBy(_._1).flatMap(_._2._2).filter(_.contains("BT"))
-    pages.map(decodePage(_, nameToCmap)).filter(_.nonEmpty)
+    lazySegments(s, "beginbfrange", "endbfrange").foreach { seg =>
+      RangeTripleRe.findAllMatchIn(seg).foreach { t =>
+        (hexInt(t.group(1)), hexInt(t.group(2)), hexInt(t.group(3))) match {
+          case (Some(lo), Some(hi), Some(dst)) =>
+            // codes are at most 2 bytes (a Type0 font's width) — a wider
+            // range is meaningless at best and a memory/CPU bomb at worst
+            // (a crafted <0> <7FFFFFFF> range would materialize 2^31 map
+            // entries). Skip, don't clamp: a clamp would fabricate
+            // mappings the document never uses. Per-entry code-point
+            // validity guards toChars (a dst near Int.MaxValue is not a
+            // throwable offense for other rows).
+            if (lo >= 0 && hi <= 0xFFFF) {
+              var c = lo
+              while (c <= hi) {
+                val cp = dst + (c - lo)
+                if (Character.isValidCodePoint(cp))
+                  out(c) = new String(Character.toChars(cp))
+                c += 1
+              }
+            }
+          case _ => // overflowed member: skip this range only
+        }
+      }
+    }
+    out.toMap
   }
 
   /** The 16-bit value of the 4 hex digits at `hex(i)`..`hex(i + 3)` —
     * `Integer.parseInt(hex.substring(i, i + 4), 16)` without the
-    * substring. Callers pass only hex-only regex groups, so every digit
-    * is valid.
+    * substring. Every char in that span must be a hex digit.
     */
   private[etl] def hex4(hex: String, i: Int): Int = {
     var v = 0
@@ -871,74 +1011,155 @@ object FlatePdfExtractor extends PageExtractor {
     sb.toString
   }
 
-  /** The text of the literal string whose `(` is at `s(open)` — the
-    * §7.3.4.2 escapes decoded by [[PdfDecrypt.literal]], one char per
-    * byte as the content stream itself is read. Callers pass the start
-    * of a [[TjRe]] or [[LitRe]] match, whose body holds no unescaped
-    * paren, so the decoder closes at the match's own `)`.
+  /** A font as show-text reads it (§9.10.2): its `/ToUnicode` map, null
+    * when it has none, and its code width in bytes — 2 for a Type0
+    * font's CIDs, 1 for a simple font's codes.
     */
-  private def literalText(s: String, open: Int): String =
-    PdfDecrypt.literal(s, open)
-      .map(new String(_, StandardCharsets.ISO_8859_1)).getOrElse("")
+  private final class Font(val cmap: Map[Int, String], val width: Int)
+  private val NoCMap = new Font(null, 1)
 
-  /** `[ … ] TJ` array bodies as (start, body), linear: TJ-close positions
-    * come from a fixed-shape regex scan, then each `[` pairs with the
-    * first close after it (resuming past the pair) — exactly the old
-    * lazy `\[(.*?)\]\s*TJ` match set without its O(opens × tail) blowup
-    * on crafted close-less content (r12, the objSlices rationale; the
-    * decoded stream the content arrives in is attacker-shaped on the
-    * ingest path even under the decode ceiling).
+  /** A string operand: its bytes, and whether it was written in hex. */
+  private final class Str(val bytes: Array[Byte], val hex: Boolean)
+  /** A number operand; show-text reads none. */
+  private object Num
+
+  /** The text one page's content shows, read in one linear pass over its
+    * tokens (ISO 32000-1 §7.8.2: operands, then their operator). Tf
+    * selects the font; Tj, `'`, `"` and TJ show their string operands
+    * through it (§9.4.3), in stream order. Literals decode with
+    * [[PdfSyntax.literalTo]], hex strings by the ASCIIHexDecode rules
+    * (§7.3.4.3: whitespace ignored, an odd final digit padded with 0). A
+    * font with a CMap maps each code of its width; a simple font shows a
+    * literal byte its CMap lacks as Latin-1. A font without a CMap shows
+    * literal bytes as Latin-1 and hex strings as nothing. A string that
+    * never closes ends the scan — it is read once, never retried at each
+    * later opener — and any operator inside an open array drops the
+    * array, so crafted openers cost one step each. Inline image data
+    * (`ID` … `EI`) is stepped over unread. The scan stops once it has
+    * shown `limit` chars. Whitespace runs collapse to one space.
     */
-  private def tjSegments(content: String): Seq[(Int, String)] = {
-    val closes = TJCloseRe.findAllMatchIn(content)
-      .map(m => (m.start, m.end)).toVector
-    val out = scala.collection.mutable.ArrayBuffer[(Int, String)]()
-    var p = content.indexOf('[')
-    var ci = 0
-    while (p >= 0) {
-      while (ci < closes.size && closes(ci)._1 <= p) ci += 1
-      if (ci >= closes.size) p = -1
-      else {
-        out += ((p, content.substring(p + 1, closes(ci)._1)))
-        p = content.indexOf('[', closes(ci)._2)
-      }
-    }
-    out.toSeq
-  }
+  private final class ContentLexer(content: String,
+                                   fontNamed: String => Font, limit: Int) {
+    private val sb = new java.lang.StringBuilder
+    private val lit = new java.io.ByteArrayOutputStream
+    private var font = NoCMap
+    // the newest two operands: show-text reads the last, Tf the one before
+    private var op0, op1: AnyRef = null
+    private var arr: ArrayBuffer[Str] = null // the open array's strings
+    private var depth = 0
 
-  private def decodePage(content: String, fonts: Map[String, Map[Int, String]]): String = {
-    // walk the stream once, tracking the current font across Tf/Tj/TJ in order
-    val events = (
-      TfRe.findAllMatchIn(content).map(m => (m.start, "Tf", m.group(1))) ++
-      TjRe.findAllMatchIn(content).map(m => (m.start, "Tj", "")) ++
-      tjSegments(content).iterator.map { case (s, b) => (s, "TJ", b) }
-    ).toSeq.sortBy(_._1)
-    var cmap: Map[Int, String] = Map.empty
-    val sb = new StringBuilder
-    def emitHex(hex: String): Unit = {
-      var i = 0
-      while (i + 4 <= hex.length) {
-        sb.append(cmap.getOrElse(hex4(hex, i), ""))
-        i += 4
-      }
-    }
-    events.foreach {
-      case (_, "Tf", name) => cmap = fonts.getOrElse(name, Map.empty)
-      case (start, "Tj", _) => sb.append(literalText(content, start))
-      case (_, "TJ", arr) =>
-        // hex and literal elements interleave in one TJ array — emit both
-        // in positional order (dropping literals when any hex is present
-        // would silently lose mixed-font text)
-        val elems =
-          HexRe.findAllMatchIn(arr).map(m => (m.start, "hex", m.group(1))) ++
-          LitRe.findAllMatchIn(arr).map(m => (m.start, "lit", ""))
-        elems.toSeq.sortBy(_._1).foreach {
-          case (_, "hex", h) => emitHex(h)
-          case (start, _, _) => sb.append(literalText(arr, start))
+    private def push(o: AnyRef): Unit =
+      if (depth > 0) o match {
+        case s: Str => arr += s
+        case _ => // numbers are kerning adjustments; nested arrays flatten
+      } else { op1 = op0; op0 = o }
+
+    private def show(o: AnyRef): Unit = o match {
+      case s: Str =>
+        val b = s.bytes
+        val cmap = font.cmap
+        if (cmap == null) {
+          if (!s.hex) {
+            var i = 0
+            while (i < b.length && sb.length < limit) {
+              sb.append((b(i) & 0xff).toChar); i += 1
+            }
+          }
+        } else {
+          val w = font.width
+          var i = 0
+          while (i + w <= b.length && sb.length < limit) {
+            val code = if (w == 2) (b(i) & 0xff) << 8 | (b(i + 1) & 0xff)
+                       else b(i) & 0xff
+            val u = cmap.getOrElse(code, null)
+            if (u != null) sb.append(u)
+            else if (w == 1 && !s.hex) sb.append(code.toChar)
+            i += w
+          }
         }
-      case _ => ()
+      case a: ArrayBuffer[_] => a.foreach(e => show(e.asInstanceOf[AnyRef]))
+      case _ =>
     }
-    WhitespaceRe.matcher(sb).replaceAll(" ").trim
+
+    /** Runs the operator in `content(from until to)`; returns where the
+      * scan resumes.
+      */
+    private def operator(from: Int, to: Int): Int = {
+      def is(op: String) = to - from == op.length && content.startsWith(op, from)
+      var next = to
+      if (is("Tf")) op1 match {
+        case name: String => font = fontNamed(name)
+        case _ =>
+      } else if (is("Tj") || is("'") || is("\"")) op0 match {
+        case s: Str => show(s)
+        case _ =>
+      } else if (is("TJ")) op0 match {
+        case a: ArrayBuffer[_] => show(a)
+        case _ =>
+      } else if (is("ID")) next = inlineImageEnd(to)
+      op0 = null; op1 = null; arr = null; depth = 0
+      next
+    }
+
+    /** Past the `EI` that ends the inline image whose data follows `ID`
+      * at `from` (§8.9.7): the first `EI` with whitespace before it and
+      * no regular character after it.
+      */
+    private def inlineImageEnd(from: Int): Int = {
+      var q = content.indexOf("EI", from + 1)
+      while (q >= 0 && !(isPdfWs(content.charAt(q - 1)) &&
+             (q + 2 == content.length || !regular(content.charAt(q + 2)))))
+        q = content.indexOf("EI", q + 1)
+      if (q < 0) content.length else q + 2
+    }
+
+    /** The chars shown before whitespace collapses. */
+    def shown: Int = sb.length
+
+    def text(): String = {
+      val n = content.length
+      var p = 0
+      while (p < n && sb.length < limit) {
+        val c = content.charAt(p)
+        if (c == '(') {
+          lit.reset()
+          val e = PdfSyntax.literalTo(content, p, lit)
+          if (e < 0) p = n
+          else { push(new Str(lit.toByteArray, false)); p = e }
+        } else if (c == '<') {
+          if (p + 1 < n && content.charAt(p + 1) == '<') p += 2
+          else {
+            val e = content.indexOf('>', p + 1)
+            if (e < 0) p = n
+            else {
+              val hex = asciiHexDecode(content.substring(p + 1, e)
+                .getBytes(StandardCharsets.ISO_8859_1))
+              push(new Str(hex.getOrElse(Array.emptyByteArray), true)); p = e + 1
+            }
+          }
+        } else if (c == '[') {
+          if (depth == 0) arr = new ArrayBuffer[Str]
+          depth += 1; p += 1
+        } else if (c == ']') {
+          if (depth > 0) {
+            depth -= 1
+            if (depth == 0) { val a = arr; arr = null; push(a) }
+          }
+          p += 1
+        } else if (c == '/') {
+          val e = tokenEnd(content, p + 1)
+          push(content.substring(p + 1, e)); p = e
+        } else if (c == '%') {
+          while (p < n && content.charAt(p) != '\n' && content.charAt(p) != '\r') p += 1
+        } else if (regular(c)) {
+          val e = tokenEnd(content, p)
+          if ((c >= '0' && c <= '9') || c == '+' || c == '-' || c == '.') {
+            push(Num); p = e
+          } else p = operator(p, e)
+        } else p += 1 // whitespace, `>`, `)`, `{`, `}`
+      }
+      WhitespaceRe.matcher(sb).replaceAll(" ").trim
+    }
   }
 }
 

@@ -103,185 +103,44 @@ private[etl] object PdfDecrypt {
   }
 
   // ---- dict-value parsing over raw ISO_8859_1 text --------------------
+  // Entries come from [[PdfSyntax.dictEntries]], which matches a key only
+  // WHOLE and only at the dictionary's top level, stepping over string
+  // values and nested dictionaries (r13/r14 review): a raw indexOf would
+  // match the `/U` PREFIX of `/UE` (dict key order is writer-arbitrary),
+  // `/`-sequences inside the BINARY /O /U strings, or a key of the nested
+  // /CF dictionary — each deriving from the wrong bytes.
 
-  /** Position just after the KEY `/name`, or −1. Token-aware (r13
-    * review): a raw indexOf would match the `/U` PREFIX of `/UE` (dict
-    * key order is writer-arbitrary) and `/`-sequences inside the
-    * BINARY /O//U literal-string values — either way deriving from the
-    * wrong bytes and quarantining an openable document. The scanner
-    * walks the dict's token structure instead: literal strings skip
-    * balanced (escape-aware), hex strings skip to `>`, and a name only
-    * matches WHOLE (ended by a delimiter).
+  /** The NAME value of `key` without its slash (`/StmF /StdCF` →
+    * "StdCF"); None when absent or not a name.
     */
-  private def keyPos(dict: String, name: String): Int = {
-    val n = dict.length
-    def nameChar(c: Char): Boolean =
-      !(c.isWhitespace || "/()<>[]{}%".indexOf(c) >= 0)
-    var p = 0
-    while (p < n) {
-      dict.charAt(p) match {
-        case '(' =>
-          var depth = 1; p += 1
-          while (p < n && depth > 0) {
-            dict.charAt(p) match {
-              case '\\' => p += 2
-              case '(' => depth += 1; p += 1
-              case ')' => depth -= 1; p += 1
-              case _ => p += 1
-            }
-          }
-        case '<' =>
-          if (p + 1 < n && dict.charAt(p + 1) == '<') p += 2
-          else { val e = dict.indexOf('>', p + 1); p = if (e < 0) n else e + 1 }
-        case '/' =>
-          var q = p + 1
-          while (q < n && nameChar(dict.charAt(q))) q += 1
-          if (q - (p + 1) == name.length &&
-              dict.regionMatches(p + 1, name, 0, name.length)) return q
-          p = q
-        case _ => p += 1
+  private def nameVal(e: Map[String, String], key: String): Option[String] =
+    e.get(key).filter(v => v.length > 1 && v.charAt(0) == '/').map(_.substring(1))
+
+  private def intVal(e: Map[String, String], key: String): Option[Int] =
+    e.get(key).flatMap(_.toIntOption)
+
+  /** The bytes of the string value `v`: hex `<…>` (whitespace ignored,
+    * an odd final digit padded with 0) or a [[PdfSyntax.literal]] `(…)`.
+    */
+  private def str(v: String): Option[Array[Byte]] =
+    if (v.startsWith("(")) PdfSyntax.literal(v, 0)
+    else if (v.startsWith("<") && !v.startsWith("<<")) {
+      val e = v.indexOf('>')
+      if (e < 0) None
+      else {
+        val hex = v.substring(1, e).filterNot(_.isWhitespace)
+        val even = if (hex.length % 2 == 0) hex else hex + "0"
+        try Some(even.grouped(2)
+          .map(h => Integer.parseInt(h, 16).toByte).toArray)
+        catch { case _: NumberFormatException => None }
       }
-    }
-    -1
-  }
+    } else None
 
-  /** The NAME value following the key `/name` (e.g. `/StmF /StdCF` →
-    * "StdCF"), or None when the key is absent or its value is not a
-    * name token.
+  /** A PDF string value for /name (binary bytes survive the ISO_8859_1
+    * round trip).
     */
-  private def nameVal(dict: String, name: String): Option[String] = {
-    var p = keyPos(dict, name)
-    if (p < 0) return None
-    while (p < dict.length && dict.charAt(p).isWhitespace) p += 1
-    if (p >= dict.length || dict.charAt(p) != '/') return None
-    var q = p + 1
-    while (q < dict.length &&
-           !(dict.charAt(q).isWhitespace ||
-             "/()<>[]{}%".indexOf(dict.charAt(q)) >= 0)) q += 1
-    if (q == p + 1) None else Some(dict.substring(p + 1, q))
-  }
-
-  /** The balanced `<< … >>` dict substring starting at the first `<<`
-    * at/after `from` — token-aware like [[keyPos]] (literal strings skip
-    * escape-aware, hex strings to `>`), so binary string values never
-    * unbalance the count. The tail when unbalanced or absent. Bounds
-    * /CF sub-dict searches: an unbounded `substring(cfp)` reaches keys
-    * PAST the /CF dict, e.g. a top-level /Length in BITS read as the
-    * crypt filter's byte count (r14 ADVICE, medium).
-    */
-  private def dictSpan(dict: String, from: Int): String = {
-    val n = dict.length
-    val start = dict.indexOf("<<", from)
-    if (start < 0) return dict.substring(from)
-    var p = start
-    var depth = 0
-    while (p < n) {
-      dict.charAt(p) match {
-        case '(' =>
-          var d = 1; p += 1
-          while (p < n && d > 0) {
-            dict.charAt(p) match {
-              case '\\' => p += 2
-              case '(' => d += 1; p += 1
-              case ')' => d -= 1; p += 1
-              case _ => p += 1
-            }
-          }
-        case '<' =>
-          if (p + 1 < n && dict.charAt(p + 1) == '<') { depth += 1; p += 2 }
-          else { val e = dict.indexOf('>', p + 1); p = if (e < 0) n else e + 1 }
-        case '>' if p + 1 < n && dict.charAt(p + 1) == '>' =>
-          depth -= 1; p += 2
-          if (depth == 0) return dict.substring(start, p)
-        case _ => p += 1
-      }
-    }
-    dict.substring(start)
-  }
-
-  private def intVal(dict: String, name: String): Option[Int] = {
-    var p = keyPos(dict, name)
-    if (p < 0) return None
-    while (p < dict.length && dict.charAt(p).isWhitespace) p += 1
-    val s = p
-    var e = p
-    if (e < dict.length && dict.charAt(e) == '-') e += 1
-    while (e < dict.length && dict.charAt(e).isDigit) e += 1
-    if (e == s || (e == s + 1 && dict.charAt(s) == '-')) None
-    else dict.substring(s, e).toIntOption
-  }
-
-  /** The bytes of the literal string whose `(` is at `s(open)`, up to
-    * its balanced `)` (ISO 32000-1 §7.3.4.2): octal escapes of one to
-    * three digits, `\n \r \t \b \f`, backslash-EOL line continuations
-    * (NO bytes — a binary /O containing 0x5C 0x0A once parsed one byte
-    * long), an escaped anything as itself (`\( \) \\`), and
-    * unescaped balanced parens kept. One char is one byte (the caller's
-    * ISO_8859_1 decoding). None when the string never closes. The
-    * encryption dict's /O /U values and the show-text operands of page
-    * content streams both decode here.
-    */
-  private[etl] def literal(s: String, open: Int): Option[Array[Byte]] = {
-    val out = new java.io.ByteArrayOutputStream()
-    var q = open + 1
-    var depth = 1
-    while (q < s.length && depth > 0) {
-      s.charAt(q) match {
-        case '\\' if q + 1 < s.length =>
-          s.charAt(q + 1) match {
-            case 'n' => out.write('\n'); q += 2
-            case 'r' => out.write('\r'); q += 2
-            case 't' => out.write('\t'); q += 2
-            case 'b' => out.write('\b'); q += 2
-            case 'f' => out.write('\f'); q += 2
-            case '\n' => q += 2 // line continuation: no bytes
-            case '\r' =>
-              q += (if (q + 2 < s.length && s.charAt(q + 2) == '\n') 3
-                    else 2) // CR or CRLF continuation: no bytes
-            case d if d >= '0' && d <= '7' =>
-              var oct = 0; var n = 0; q += 1
-              while (n < 3 && q < s.length &&
-                     s.charAt(q) >= '0' && s.charAt(q) <= '7') {
-                oct = oct * 8 + (s.charAt(q) - '0'); q += 1; n += 1
-              }
-              out.write(oct & 0xff)
-            case c => out.write(c); q += 2 // \( \) \\ and any other
-          }
-        case '(' => depth += 1; out.write('('); q += 1
-        case ')' =>
-          depth -= 1
-          if (depth > 0) out.write(')')
-          q += 1
-        case c => out.write(c); q += 1
-      }
-    }
-    if (depth != 0) None else Some(out.toByteArray)
-  }
-
-  /** A PDF string value for /name: hex `<…>` or a [[literal]] `(…)`
-    * (binary bytes survive the ISO_8859_1 round trip).
-    */
-  private[etl] def strVal(dict: String, name: String): Option[Array[Byte]] = {
-    var p = keyPos(dict, name)
-    if (p < 0) return None
-    while (p < dict.length && (dict.charAt(p) == ' ' || dict.charAt(p) == '\n' ||
-           dict.charAt(p) == '\r' || dict.charAt(p) == '\t')) p += 1
-    if (p >= dict.length) return None
-    dict.charAt(p) match {
-      case '<' =>
-        val e = dict.indexOf('>', p + 1)
-        if (e < 0) None
-        else {
-          val hex = dict.substring(p + 1, e).filterNot(_.isWhitespace)
-          val even = if (hex.length % 2 == 0) hex else hex + "0"
-          try Some(even.grouped(2)
-            .map(h => Integer.parseInt(h, 16).toByte).toArray)
-          catch { case _: NumberFormatException => None }
-        }
-      case '(' => literal(dict, p)
-      case _ => None
-    }
-  }
+  private[etl] def strVal(dict: String, name: String): Option[Array[Byte]] =
+    PdfSyntax.dictEntries(dict).get(name).flatMap(str)
 
   // ---- opening the document -------------------------------------------
 
@@ -457,25 +316,17 @@ private[etl] object PdfDecrypt {
   private[etl] def open(encryptDict: String, trailerText: String,
                         password: String): Option[Ctx] = {
     try {
-      if (keyPos(encryptDict, "Filter") < 0 ||
-          keyPos(encryptDict, "Standard") < 0) return None
-      val v = intVal(encryptDict, "V").getOrElse(0)
-      val r = intVal(encryptDict, "R").getOrElse(if (v >= 2) 3 else 2)
-      val id0 = {
-        val idp = keyPos(trailerText, "ID")
-        if (idp < 0) Array.emptyByteArray
-        else {
-          // /ID [ <…> <…> ] — reuse the string parser on a shifted
-          // view whose "/X" is followed by the array's first element
-          val sub = trailerText.substring(idp)
-          val br = sub.indexOf('[')
-          if (br < 0) Array.emptyByteArray
-          else strVal("/X " + sub.substring(br + 1), "X")
-            .getOrElse(Array.emptyByteArray)
-        }
-      }
-      val o = strVal(encryptDict, "O").getOrElse(return None)
-      val u = strVal(encryptDict, "U").getOrElse(return None)
+      val e = PdfSyntax.dictEntries(encryptDict)
+      if (!e.get("Filter").contains("/Standard")) return None
+      val v = intVal(e, "V").getOrElse(0)
+      val r = intVal(e, "R").getOrElse(if (v >= 2) 3 else 2)
+      // /ID [ <…> <…> ]: key derivation reads the first element
+      val id0 = PdfSyntax.dictEntries(trailerText).get("ID")
+        .filter(_.startsWith("["))
+        .flatMap(a => str(a.substring(1).dropWhile(PdfSyntax.isPdfWs)))
+        .getOrElse(Array.emptyByteArray)
+      val o = e.get("O").flatMap(str).getOrElse(return None)
+      val u = e.get("U").flatMap(str).getOrElse(return None)
       // /StmF names the crypt filter applied to STREAMS (the only
       // content class the extractor decrypts). Spec default when absent
       // is /Identity (ISO 32000-1 §7.6.5, Table 20) — pdfminer does the
@@ -483,31 +334,24 @@ private[etl] object PdfDecrypt {
       // its plaintext streams (r14 ADVICE: applying the V2/AESV2
       // transform here garbled streams that were never encrypted).
       val stmF: Option[String] =
-        if (v >= 4) Some(nameVal(encryptDict, "StmF").getOrElse("Identity"))
+        if (v >= 4) Some(nameVal(e, "StmF").getOrElse("Identity"))
         else None
-      // the /CF sub-dict, BOUNDED by its balanced `>>` (r14 ADVICE,
-      // medium: an open-ended substring(cfp) let the crypt-filter
-      // Length lookup escape into top-level keys that happen to follow
-      // /CF — and when /StmF preceded /CF, the filter-name search
-      // matched the /StmF VALUE token and read the top-level /Length
-      // (bits) as a byte count, quarantining a valid 40-bit document)
-      val cfScope: Option[String] = {
-        val cfp = keyPos(encryptDict, "CF")
-        if (cfp >= 0) Some(dictSpan(encryptDict, cfp)) else None
-      }
-      // resolve the named filter's /CFM inside the bounded /CF dict
-      def resolvedCfm(filterName: String): Option[String] = {
-        if (filterName == "Identity") return Some("Identity")
-        val scope = cfScope.getOrElse(encryptDict)
-        val fp = keyPos(scope, filterName)
-        if (fp < 0) None
-        else nameVal(dictSpan(scope, fp), "CFM") match {
+      // the named crypt filter's own dict, read inside /CF << … >> only
+      // (r14 ADVICE, medium: a search past /CF read top-level keys that
+      // follow it — the /StmF VALUE token as the filter's name and the
+      // top-level /Length in bits as its byte count, quarantining a valid
+      // 40-bit document)
+      val cf = e.get("CF").map(PdfSyntax.dictEntries).getOrElse(Map.empty)
+      def filterDict(name: String): Option[Map[String, String]] =
+        cf.get(name).map(PdfSyntax.dictEntries)
+      def resolvedCfm(filterName: String): Option[String] =
+        if (filterName == "Identity") Some("Identity")
+        else filterDict(filterName).flatMap(nameVal(_, "CFM")) match {
           case Some("None") => Some("Identity")
           case other => other
         }
-      }
       if (v >= 5) {
-        val ue = strVal(encryptDict, "UE").getOrElse(return None)
+        val ue = e.get("UE").flatMap(str).getOrElse(return None)
         // a RESOLVED foreign CFM quarantines (decrypting under a wrong
         // transform garbles rather than reason-codes); an UNRESOLVABLE
         // one (/CF stored as an indirect object the text scan can't
@@ -525,7 +369,7 @@ private[etl] object PdfDecrypt {
         // form — as typed, NFC, then the SASLprep form ISO 32000-2
         // mandates for AESV3 (Acrobat-written documents are keyed from
         // it; see saslprep). As-typed stays first for raw-bytes parity.
-        val oeOpt = strVal(encryptDict, "OE")
+        val oeOpt = e.get("OE").flatMap(str)
         return (pwdForms(password) :+ saslprep(password))
           .distinct.iterator.map { form =>
             val pwd6 = form.getBytes(StandardCharsets.UTF_8).take(127)
@@ -540,22 +384,17 @@ private[etl] object PdfDecrypt {
       val keyLen = clamp(
         if (v <= 1) 5
         else if (v == 4) {
-          // /CF << /<StmF-name> << … /Length n >> >> — searched INSIDE
-          // the bounded /CF dict, then INSIDE the filter's own sub-dict
-          // (r14 ADVICE: the unbounded search matched the /StmF value
-          // token and read the top-level bits /Length as bytes). Real
-          // writers disagree on the crypt-filter Length unit (the spec
-          // says bits, Acrobat writes bytes): ≥40 can only be bits.
-          val scope = cfScope.getOrElse(encryptDict)
-          val cf = stmF.filter(_ != "Identity")
-            .map(keyPos(scope, _)).getOrElse(-1)
-          val inner =
-            if (cf >= 0) intVal(dictSpan(scope, cf), "Length") else None
-          inner.map(n => if (n >= 40) n / 8 else n)
-            .orElse(intVal(encryptDict, "Length").map(_ / 8))
+          // /CF << /<StmF-name> << … /Length n >> >>, the filter's own
+          // dict. Real writers disagree on the crypt-filter Length unit
+          // (the spec says bits, Acrobat writes bytes): ≥40 can only be
+          // bits.
+          stmF.filter(_ != "Identity").flatMap(filterDict)
+            .flatMap(intVal(_, "Length"))
+            .map(n => if (n >= 40) n / 8 else n)
+            .orElse(intVal(e, "Length").map(_ / 8))
             .getOrElse(16)
         }
-        else intVal(encryptDict, "Length").map(_ / 8).getOrElse(5))
+        else intVal(e, "Length").map(_ / 8).getOrElse(5))
       val cfm =
         if (v < 4) "V2"
         else stmF.flatMap(resolvedCfm) match {
@@ -563,12 +402,8 @@ private[etl] object PdfDecrypt {
           case Some(_) => return None // unknown CFM: quarantine, don't garble
           case None => return None    // /StmF names a filter /CF lacks
         }
-      val encryptMetadata = {
-        val mp = keyPos(encryptDict, "EncryptMetadata")
-        mp < 0 || !encryptDict.regionMatches(
-          encryptDict.indexWhere(!_.isWhitespace, mp), "false", 0, 5)
-      }
-      val p = intVal(encryptDict, "P").getOrElse(-1)
+      val encryptMetadata = !e.get("EncryptMetadata").contains("false")
+      val p = intVal(e, "P").getOrElse(-1)
       // R2–R4 byte candidates (see the object scaladoc): Latin-1 per
       // string form, plus the UTF-8 bytes when the form carries
       // non-Latin-1 characters — getBytes(ISO_8859_1) silently flattens

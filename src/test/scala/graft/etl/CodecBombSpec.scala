@@ -188,6 +188,140 @@ class CodecBombSpec extends AnyFunSuite {
     assert(pages === Seq("ok"), pages)
   }
 
+  test("unclosed-literal CPU bomb: 400k `(` end the scan once, the text before them stays") {
+    // one literal that never closes is read to the end once, not retried
+    // at each of its 400k nested openers
+    val content = "BT (ok) Tj " + ("(" * 400000) + ") Tj ET"
+    val doc = pdf(streamObj(1, "/Filter /FlateDecode", deflateS(content)))
+    val pages = timed(30000, "extract") { FlatePdfExtractor.extractPages(doc) }
+    assert(pages === Seq("ok"), pages)
+  }
+
+  /** A catalog (1) over page tree node 2 and `nodes`, with a trailer. */
+  private def treeDoc(nodes: String*): Array[Byte] =
+    pdf(("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n" +: nodes) :+
+      "trailer\n<< /Root 1 0 R >>\n": _*)
+
+  test("page-tree cycles: a /Kids self-cycle and an A→B→A cycle visit each node once") {
+    val page = "3 0 obj\n<< /Type /Page /Contents 4 0 R >>\nendobj\n" +
+      streamObj(4, "", "BT (once) Tj ET".getBytes(StandardCharsets.ISO_8859_1))
+    val self = treeDoc("2 0 obj\n<< /Type /Pages /Kids [2 0 R 3 0 R] >>\nendobj\n", page)
+    assert(timed(30000, "self-cycle") { FlatePdfExtractor.extractPages(self) } === Seq("once"))
+    val ab = treeDoc(
+      "2 0 obj\n<< /Type /Pages /Kids [5 0 R 3 0 R] >>\nendobj\n",
+      "5 0 obj\n<< /Type /Pages /Parent 2 0 R /Kids [2 0 R] >>\nendobj\n", page)
+    assert(timed(30000, "A→B→A") { FlatePdfExtractor.extractPages(ab) } === Seq("once"))
+  }
+
+  test("a 100k-deep /Pages chain walks without a stack overflow") {
+    val depth = 100000
+    val chain = (2 until depth + 2).map { n =>
+      s"$n 0 obj\n<< /Type /Pages /Kids [${n + 1} 0 R] >>\nendobj\n"
+    }
+    val leaf = depth + 2
+    val doc = treeDoc(chain ++ Seq(
+      s"$leaf 0 obj\n<< /Type /Page /Contents ${leaf + 1} 0 R >>\nendobj\n",
+      streamObj(leaf + 1, "", "BT (deep) Tj ET".getBytes(StandardCharsets.ISO_8859_1))): _*)
+    val pages = timed(30000, "deep tree") { FlatePdfExtractor.extractPages(doc) }
+    assert(pages === Seq("deep"), pages)
+  }
+
+  /** Bytes this thread allocates while `body` runs (HotSpot's counter). */
+  private def allocated[A](body: => A): (A, Long) = {
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val id = Thread.currentThread().getId
+    val before = mx.getThreadAllocatedBytes(id)
+    val a = body
+    (a, mx.getThreadAllocatedBytes(id) - before)
+  }
+
+  test("streams no page reads cost nothing: font programs and images are never inflated") {
+    // a /FontFile2 program (its /Length1 marks it) whose inflated bytes
+    // read as a content stream shows no page
+    val ghost = pdf(
+      streamObj(1, "/Length1 17 /Filter /FlateDecode", deflateS("BT (ghost) Tj ET")),
+      streamObj(2, "/Filter /FlateDecode", deflateS("BT (real) Tj ET")))
+    assert(FlatePdfExtractor.extractPages(ghost) === Seq("real"))
+    // a 128 MB-of-zeros font program and a Flate image: inflating either
+    // would allocate past the 64 MB ceiling, reading neither allocates a
+    // few times the ~260 KB document
+    val zeros = deflate(new Array[Byte](128 << 20))
+    val doc = pdf(
+      streamObj(1, "/Length1 134217728 /Filter /FlateDecode", zeros),
+      streamObj(2, "/Type /XObject /Subtype /Image /Width 8192 /Height 16384 " +
+        "/BitsPerComponent 8 /ColorSpace /DeviceGray /Filter /FlateDecode", zeros),
+      streamObj(3, "/Filter /FlateDecode", deflateS("BT (intact) Tj ET")))
+    val (pages, bytes) = timed(30000, "extract") {
+      allocated(FlatePdfExtractor.extractPages(doc))
+    }
+    assert(pages === Seq("intact"), pages)
+    assert(bytes < (32L << 20), s"extraction allocated $bytes bytes")
+  }
+
+  test("a stream named 10k times is read for one page: repeated /Contents entries, leaves, shared arrays") {
+    // ~1 MB of shown text behind a ~1 KB Flate stream: read once per
+    // name it would be ~10 GB of page text
+    val big = streamObj(5, "/Filter /FlateDecode",
+      deflateS("BT (" + ("x" * (1 << 20)) + ") Tj ET"))
+    val refs = Seq.fill(10000)("5 0 R").mkString("[", " ", "]")
+    val leaves = 10 until 10010
+    def leafDoc(contents: String, more: String*): Array[Byte] =
+      treeDoc(Seq(s"2 0 obj\n<< /Type /Pages /Kids " +
+        s"[${leaves.map(n => s"$n 0 R").mkString(" ")}] >>\nendobj\n", big) ++ more ++
+        leaves.map(n => s"$n 0 obj\n<< /Type /Page /Contents $contents >>\nendobj\n"): _*)
+    val docs = Seq(
+      "one /Contents array" -> treeDoc(
+        "2 0 obj\n<< /Type /Pages /Kids [3 0 R] >>\nendobj\n",
+        s"3 0 obj\n<< /Type /Page /Contents $refs >>\nendobj\n", big),
+      "10k leaves" -> leafDoc("5 0 R"),
+      "10k leaves over one indirect array" ->
+        leafDoc("7 0 R", s"7 0 obj\n$refs\nendobj\n"))
+    for ((what, doc) <- docs) {
+      val (pages, bytes) = timed(30000, what) {
+        allocated(FlatePdfExtractor.extractPages(doc))
+      }
+      assert(pages.map(_.length) === Seq(1 << 20), what)
+      assert(bytes < (128L << 20), s"$what allocated $bytes bytes")
+    }
+  }
+
+  test("fonts and CMaps are read once, however many names and fonts point at them") {
+    // an ~8 MB CMap behind 2000 font names: 1000 names for one font
+    // object and 1000 font objects of their own, all over CMap 3
+    val cmap = "begincmap 1 beginbfchar <41> <1218> endbfchar " +
+      ("1 beginbfchar <FFFF> <0041> endbfchar\n" * 200000) + "endcmap"
+    val names = (0 until 1000).map(i => s"/G$i 2 0 R") ++
+      (0 until 1000).map(i => s"/F$i ${100 + i} 0 R")
+    val selects = (0 until 1000).map(i => s"/G$i 1 Tf (A) Tj /F$i 1 Tf (A) Tj")
+    val doc = pdf(Seq(
+      s"1 0 obj\n<< /Font << ${names.mkString(" ")} >> >>\nendobj\n",
+      "2 0 obj\n<< /Type /Font /Subtype /Type1 /ToUnicode 3 0 R >>\nendobj\n",
+      streamObj(3, "/Filter /FlateDecode", deflateS(cmap)),
+      streamObj(4, "/Filter /FlateDecode",
+        deflateS(selects.mkString("BT ", " ", " ET")))) ++
+      (0 until 1000).map(i =>
+        s"${100 + i} 0 obj\n<< /Type /Font /Subtype /Type1 /ToUnicode 3 0 R >>\nendobj\n"): _*)
+    val pages = timed(30000, "extract") { FlatePdfExtractor.extractPages(doc) }
+    assert(pages === Seq("መ" * 2000))
+  }
+
+  test("show-text stops at the document's ceiling when a CMap maps one code to a long string") {
+    // the code A shows 1024 chars: each page's 128k A's would show 128M
+    val cmap = s"begincmap 1 beginbfchar <41> <${"0061" * 1024}> endbfchar endcmap"
+    val page = deflateS("BT /F1 1 Tf (" + ("A" * (1 << 17)) + ") Tj ET")
+    val doc = pdf(
+      "1 0 obj\n<< /Font << /F1 2 0 R >> >>\nendobj\n",
+      "2 0 obj\n<< /Type /Font /Subtype /Type1 /ToUnicode 3 0 R >>\nendobj\n",
+      streamObj(3, "/Filter /FlateDecode", deflateS(cmap)),
+      streamObj(4, "/Filter /FlateDecode", page),
+      streamObj(5, "/Filter /FlateDecode", page))
+    val pages = timed(30000, "extract") { FlatePdfExtractor.extractPages(doc) }
+    assert(pages.nonEmpty && pages.head.startsWith("aaaa"))
+    assert(pages.map(_.length.toLong).sum <=
+      FlatePdfExtractor.MaxDecodedStreamBytes + 1024, pages.map(_.length))
+  }
+
   test("bfrange span bomb: a <00000000><7FFFFFFF> range is skipped, sane CMap entries still map") {
     // 2^31 map inserts before the cap — an OOM/CPU bomb through the
     // ToUnicode path; CIDs here are 16-bit so the wide range carries no

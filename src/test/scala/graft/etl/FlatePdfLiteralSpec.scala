@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Show-text literals (`(…) Tj` and the literal elements of `[…] TJ`)
   * decode with the ISO 32000-1 §7.3.4.2 escape rules, through the same
   * decoder as the encryption dict's string values
-  * ([[PdfDecrypt.literal]], whose `strVal` cases PdfDecryptSpec pins).
+  * ([[PdfSyntax.literal]], whose `strVal` cases PdfDecryptSpec pins).
   * The page text then has its whitespace runs collapsed to one space, as
   * every extracted page does.
   */

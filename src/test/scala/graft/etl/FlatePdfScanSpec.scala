@@ -70,8 +70,8 @@ class FlatePdfScanSpec extends AnyFunSuite {
   }
 
   test("hex4 == Integer.parseInt(substring) on mixed-case hex, FFFF and an odd trailing digit") {
-    // both callers walk `i + 4 <= length`, so a trailing digit past the
-    // last whole group is never read
+    // its caller, the CMap destination decode, walks `i + 4 <= length`,
+    // so a trailing digit past the last whole group is never read
     def units(hex: String)(read: (String, Int) => Int): Seq[Int] =
       (0 to hex.length - 4 by 4).map(read(hex, _))
     val formula = (hex: String, i: Int) => Integer.parseInt(hex.substring(i, i + 4), 16)

@@ -583,6 +583,9 @@ class PdfDecryptSpec extends AnyFunSuite {
     // the real key — the scanner skips string values
     assert(PdfDecrypt.strVal("""<< /O (decoy /U <41> bytes) /U <42> >>""",
       "U").map(_.toSeq) === Some(Seq[Byte](0x42)))
+    // nor may a key of a nested dictionary
+    assert(PdfDecrypt.strVal("""<< /CF << /U <41> >> /U <42> >>""",
+      "U").map(_.toSeq) === Some(Seq[Byte](0x42)))
   }
 
   test("incremental update: the LAST revision of the Encrypt object wins (r13 review)") {
